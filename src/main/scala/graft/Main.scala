@@ -1,91 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{avg, coalesce, col, count, count_distinct, expr, lit, max, sum, when}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{avg, col, count, count_distinct, expr, lit, max, sum, when}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Transform}
+import graft.etl.Compact.longs
+import graft.queries.{DedupQueries, DocumentQueries, EmbeddingQueries, QueryConf}
 
 /** CLI entry point — the reference's `s3logs` binary surface
-  * (s3logs/src/main.rs:7-48) re-expressed over the Spark engine:
+  * (s3logs/src/main.rs:7-48) re-expressed over the Spark engine, plus the
+  * training-data verbs that compose into ingest → spandedup → curate →
+  * decontam → pack (pinned end to end by MainSpec's composition test).
   *
-  *   aggregate s3 -r <region> -b <bucket> -k <key>
-  *       parse one S3 object (read via s3a://bucket/key) and report the
-  *       line count — main.rs:55-59's `process_s3` path.
-  *   aggregate local <input>...
-  *       parse local files/dirs and report per-input line counts —
-  *       main.rs:60-90's `process_local` loop (every directory arg is
-  *       expanded to its files, same as main.rs:61-78, so the per-FILE
-  *       count contract holds for multi-arg invocations too).
-  *   transform [-o <outDir>] [--loop <seconds> [--iterations <n>]] [<input>...]
-  *       the full batch pipeline ([[Transform.run]]): parse → conform →
-  *       dedup → partitioned parquet. With no input it scans
-  *       $S3LOGS_STAGGING_ROOT_PATH, exactly like main.rs:97-101's
-  *       `process_stagging_dir`. Prints "transform task ended, N lines
-  *       processed" (main.rs:99,106 parity). `--loop` re-runs on a timer
-  *       over the age gate, moving processed files to `.processed/` —
-  *       the scripts/transform.sh daemon shape; see [[transformLoop]].
-  *   stream [--once] <landingDir> <outDir> <checkpointDir>
-  *       the streaming mode (s3logd-stream analog): continuous
-  *       [[StreamingTransform]] query over a landing directory; `--once`
-  *       drains the backlog and exits (the timer-driven
-  *       s3log-lambda-transformer shape, Trigger.AvailableNow).
-  *   stream [--once] --queue-dir <queueDir> [--objects <objDir>] <outDir> <checkpointDir>
-  *       the queue-fed streaming mode (s3logd's SQS poll shape):
-  *       notifications arrive through the `graft-queue` connector over a
-  *       [[graft.sources.FileQueue]] at `queueDir` — leases, sink-side
-  *       ack after the transform lands, redelivery on crash.
-  *   ingest [--once] [--sigs <sigDir>] [--spansigs <dir>] [--winnowsigs <dir>] [--repsigs <dir>] [--decontam <dir>] <dropDir> <corpusDir> <checkpointDir>
-  *       training-corpus ingestion ([[graft.streaming.DocumentIngest]]):
-  *       JSON-lines crawl drop → watermarked content-fingerprint dedup →
-  *       lang-partitioned parquet corpus. `--sigs` maintains the d16
-  *       signature-table artifact per micro-batch alongside the corpus;
-  *       `--spansigs` the d36 span-signature sidecar; `--repsigs` the d16/d24 rep-index sidecar; `--winnowsigs`
-  *       the d53/d54 winnowed-fp index sidecar; `--decontam` the
-  *       d39 ingest gate (each batch's train-side docs dispositioned
-  *       against the standing eval n-gram artifact, report + artifact
-  *       fold per batch).
-  *   compact <lakeDir> [--flat | --sigs | --spansigs | --evalsigs | --winnowsigs | --repsigs | <partitionCol>...]
-  *       small-file compaction ([[graft.etl.Compact]]); partition columns
-  *       auto-detected from the lake's hive directory names. `--flat`
-  *       compacts an unpartitioned dir (e.g. the streaming signature
-  *       table) — explicit, never inferred. `--sigs`/`--spansigs`/
-  *       `--evalsigs` compact a `batch=`-partitioned signature SIDECAR's
-  *       generations into one via the artifact's own read-side fold
-  *       ([[graft.etl.Compact.sidecar]], conservation-checked) — run
-  *       while the producing ingest is stopped.
-  *   dedup <corpusDir> <outDir> [--best]
-  *       corpus disposition ([[graft.queries.DedupQueries.dedupApply]],
-  *       d25): label every document kept / exact_dup / near_dup with its
-  *       canonical doc and write the disposition parquet — the step a
-  *       training pipeline runs between `ingest` and training-set
-  *       emission (filter the corpus to `status = 'kept'`, or join on
-  *       `canonical_id`). `--best` swaps in the d34 policy: each
-  *       cluster keeps its highest-quality member, not its oldest.
-  *   spandedup <corpusDir> <outDir> [--sep <s>]
-  *       cross-doc repeated-SPAN removal (d28): paragraphs on the
-  *       literal separator, canonical occurrence kept, docs rewritten.
-  *   curate <corpusDir> <outDir> [--quality-min <q>] [--best]
-  *       the end-to-end curation pipeline: quality/language gates →
-  *       full dedup (d25, or d34 under `--best`) → temperature
-  *       rebalancing → split; writes `<out>/dispositions` + the kept
-  *       corpus hive-partitioned by split.
-  *   decontam <corpusDir> <outDir> [--n <tokens>]
-  *       exact n-gram benchmark decontamination, both directions:
-  *       `<out>/eval_report` (d30) + `<out>/train_dispositions` (d32).
-  *   bpetrain <corpusDir> <outDir> [--merges <k>] [--min-count <n>]
-  *       d29 tokenizer training on the production path (one distributed
-  *       corpus pass + driver-side merge loop over the Heaps-bounded
-  *       word table); writes the merge-table parquet d29b consumes.
-  *   tokenize <corpusDir> <mergesDir> <outDir>
-  *       d29b off the saved bpetrain artifact: per-doc BPE token counts
-  *       under an already-trained merge table (no training runs).
-  *   pack <corpusDir> <outDir> [--seq-len <n>]
-  *       d26 sequence packing: the provenance slice table a data
-  *       loader consumes.
-  *
-  * The subcommands compose into the full training-data path:
-  * ingest → spandedup → curate → decontam → pack (pinned end-to-end by
-  * MainSpec's composition test).
+  * Every verb is one row of [[verbs]]: its positionals (inputs, then
+  * outputs), switches, valued flags with their checks and defaults, and a
+  * body. One parser refuses unknown flags, bad values and wrong arity
+  * before any job runs; every verb that replaces its output first runs
+  * [[guardOutputClash]] against all of its inputs; one writer
+  * ([[Args.write]]) applies the configured codec and file-size cap; and
+  * `usage` is printed from the table.
   *
   * Config comes from the process environment via [[EtlConfig.fromEnv]] —
   * the reference's full env vocabulary, unknown S3LOGS_* keys rejected
@@ -97,37 +31,257 @@ import graft.etl.{AccessLogParser, Compact, EtlConfig, StreamingTransform, Trans
   */
 object Main {
 
-  private val usage =
-    """usage:
-      |  graft.Main aggregate s3 -r <region> -b <bucket> -k <key>
-      |  graft.Main aggregate local <input>...
-      |  graft.Main transform [-o <outDir>] [--loop <seconds> [--iterations <n>]] [<input>...]
-      |  graft.Main stream [--once] <landingDir> <outDir> <checkpointDir>
-      |  graft.Main stream [--once] --queue-dir <queueDir> [--objects <objDir>] <outDir> <checkpointDir>
-      |  graft.Main ingest [--once] [--sigs <sigDir>] [--spansigs <dir> [--span-sep <s>]] [--winnowsigs <dir>] [--repsigs <dir>] [--decontam <dir> [--decontam-n <k>]] [--quality-min <q> [--rejects <dir>]] <dropDir> <corpusDir> <checkpointDir>
-      |  graft.Main compact <lakeDir> [--flat | --sigs | --spansigs | --evalsigs | --winnowsigs | --repsigs | <partitionCol>...]
-      |  graft.Main dedup <corpusDir> <outDir> [--best]
-      |  graft.Main spandedup <corpusDir> <outDir> [--sep <separator>]
-      |  graft.Main curate <corpusDir> <outDir> [--quality-min <score>] [--best]
-      |  graft.Main decontam <corpusDir> <outDir> [--n <tokens>]
-      |  graft.Main bpetrain <corpusDir> <outDir> [--merges <k>] [--min-count <n>]
-      |  graft.Main tokenize <corpusDir> <mergesDir> <outDir>
-      |  graft.Main pack <corpusDir> <outDir> [--seq-len <tokens>]
-      |  graft.Main overlap <corpusDir> <outDir>
-      |  graft.Main select <corpusDir> <outDir> [--frac <f>]
-      |  graft.Main semdedup <embeddingsDir> <outDir> [--tau <t>]
-      |  graft.Main semdecontam <trainEmbDir> <evalEmbDir> <outDir> [--tau <t>]
-      |  graft.Main dsir <rawCorpusDir> <targetCorpusDir> <outDir>
-      |  graft.Main cluster <corpusDir> <outDir>
-      |  graft.Main bm25index <corpusDir> <outDir>
-      |  graft.Main bm25 <indexDir> <probesDir> <outDir> [--topk <k>]
-      |  graft.Main ivftrain <embeddingsDir> <outDir>
-      |  graft.Main ivfindex <embeddingsDir> <centroidsDir> <outDir>
-      |  graft.Main ann <embeddingsDir> <outDir> [--topk <k>] [--queries <dir> | --nqueries <n>] [--centroids <dir> [--index <dir>]]
-      |  graft.Main fuse <ranksDir> <ranksDir>... <outDir> [--topk <k>]
-      |  graft.Main salvage <corpusDir> <outDir> [--quality-min <q>] [--sep <s>]
-      |      (writes a MANIFEST (doc_id, n_paras, n_dropped, salvaged), not a
-      |       corpus — join it back on doc_id like a spandedup manifest)""".stripMargin
+  /** What a valued flag accepts; `parse` answers None for a refused
+    * value. `InDir` is a directory the verb reads: the output guard
+    * covers it like an input positional. */
+  private[graft] sealed abstract class Kind(val what: String,
+      val parse: String => Option[Any])
+  private case object Str extends Kind("a string", Some(_))
+  private case object InDir extends Kind("a directory", Some(_))
+  private case object Int1 extends Kind("an integer >= 1",
+    _.toIntOption.filter(_ >= 1))
+  private case object Long0 extends Kind("an integer >= 0",
+    _.toLongOption.filter(_ >= 0))
+  private case object Long1 extends Kind("a positive integer",
+    _.toLongOption.filter(_ >= 1))
+  private case object Frac extends Kind("a number in (0, 1]",
+    _.toDoubleOption.filter(d => d > 0 && d <= 1))
+  private case object Frac0 extends Kind("a number in [0, 1]",
+    _.toDoubleOption.filter(d => d >= 0 && d <= 1))
+
+  private[graft] final case class Flag(name: String, meta: String,
+      kind: Kind = Str, default: SparkSession => Option[Any] = _ => None,
+      required: Boolean = false) {
+    def usage: String = if (required) s"$name <$meta>" else s"[$name <$meta>]"
+  }
+
+  /** One CLI verb. `in` then `out` are its positionals (`<x>...` takes
+    * one or more values, `[<x>...]` zero or more). With `overwrite` the
+    * single `out` is replaced, so it must not equal, alias or nest with
+    * any input positional or `InDir` flag. */
+  private[graft] final case class Verb(name: String, in: String = "",
+      out: String = "", switches: Seq[String] = Nil, flags: Seq[Flag] = Nil,
+      overwrite: Boolean = true, doc: String = "")(
+      val body: Args => Seq[String]) {
+    val words: List[String] = name.split(' ').toList
+    val positional: Seq[String] = s"$in $out".split(' ').filter(_.nonEmpty).toSeq
+    def usage: String = {
+      val (req, opt) = flags.partition(_.required)
+      (Seq("graft.Main", name) ++ positional ++ req.map(_.usage) ++
+        switches.map(s => s"[$s]") ++ opt.map(_.usage))
+        .mkString(" ").padTo(58, ' ') + s" # $doc"
+    }
+  }
+
+  /** A parsed invocation, handed to the verb's body. */
+  private[graft] final class Args(val spark: SparkSession, val cfg: EtlConfig,
+      val env: Map[String, String], val pos: Seq[String],
+      switches: Set[String], values: Map[String, Any],
+      defaults: Map[String, Any]) {
+    def has(switch: String): Boolean = switches(switch)
+    /** The flag's value if it was given. */
+    def opt[T](flag: String): Option[T] = values.get(flag).map(_.asInstanceOf[T])
+    /** The flag's value, or its declared default. */
+    def apply[T](flag: String): T =
+      values.getOrElse(flag, defaults(flag)).asInstanceOf[T]
+    def read(dir: String): DataFrame = spark.read.parquet(dir)
+    def docs(dir: String): DataFrame = read(dir).select("doc_id", "text")
+    def vectors(dir: String): DataFrame = read(dir).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    /** The one parquet writer: replaces `out` with the configured codec
+      * and records-per-file cap. */
+    def write(df: DataFrame, out: String, partitionBy: String*): Unit = {
+      val w = df.write.mode("overwrite")
+        .option("compression", cfg.compression)
+        .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(out)
+    }
+  }
+
+  private val topK = Flag("--topk", "k", Int1, s => Some(QueryConf.bm25TopK(s)))
+  private val sep = Flag("--sep", "separator", Str, _ => Some("\n\n"))
+  private val compactSwitches = "--flat" +: Compact.sidecarKinds.keys.toSeq.sorted
+  private def required(name: String, meta: String) =
+    Flag(name, meta, required = true)
+
+  private[graft] val verbs: Seq[Verb] = Seq(
+    Verb("aggregate s3", flags = Seq(required("-r", "region"),
+        required("-b", "bucket"), required("-k", "key")), overwrite = false,
+      doc = "parse one S3 object, print its line count")(aggregateS3),
+    Verb("aggregate local", "<input>...", overwrite = false,
+      doc = "parse local files/dirs, per-file line counts")(aggregateLocal),
+    Verb("transform", "[<input>...]", flags = Seq(Flag("-o", "outDir"),
+        Flag("--loop", "seconds", Long0), Flag("--iterations", "n", Int1)),
+      overwrite = false, doc = "batch pipeline -> hourly parquet (appends); " +
+        "--loop = daemon over the age gate")(transform),
+    Verb("stream", "<landingDir>", "<outDir> <checkpointDir>",
+      Seq("--once"), overwrite = false,
+      doc = "streaming pipeline over a landing dir (--once = drain + exit)")(
+      streamFiles),
+    Verb("stream", "", "<outDir> <checkpointDir>", Seq("--once"),
+      Seq(Flag("--queue-dir", "queueDir", required = true),
+        Flag("--objects", "objDir")), overwrite = false,
+      doc = "queue-fed streaming (graft-queue connector)")(streamQueue),
+    Verb("ingest", "<dropDir>", "<corpusDir> <checkpointDir>", Seq("--once"),
+      Seq(Flag("--sigs", "dir"), Flag("--spansigs", "dir"),
+        Flag("--span-sep", "s", Str, _ => Some("\n\n")),
+        Flag("--winnowsigs", "dir"), Flag("--repsigs", "dir"),
+        Flag("--decontam", "dir"), Flag("--decontam-n", "k", Int1, _ => Some(8)),
+        Flag("--quality-min", "q", Frac), Flag("--rejects", "dir")),
+      overwrite = false, doc = "crawl drop -> deduped lang-partitioned " +
+        "corpus (+ signature sidecars, d39 decontam gate, d09 quality gate)")(
+      ingest),
+    Verb("compact", "<lakeDir> [<partitionCol>...]",
+      switches = compactSwitches,
+      overwrite = false, doc = "small-file compaction (cols auto-detected); " +
+        "--flat = unpartitioned dir; a sidecar switch folds its batch= " +
+        "generations into one")(compact),
+    Verb("dedup", "<corpusDir>", "<outDir>", Seq("--best"),
+      doc = "d25 (--best: d34 quality-canonical) disposition: " +
+        "kept/exact_dup/near_dup + canonical_id")(dedup),
+    Verb("spandedup", "<corpusDir>", "<outDir>", flags = Seq(sep),
+      doc = "d28 cross-doc repeated-span removal; docs rewritten")(spanDedup),
+    Verb("curate", "<corpusDir>", "<outDir>", Seq("--best"),
+      Seq(Flag("--quality-min", "score", Frac0, _ => Some(0.5))),
+      doc = "quality/lang gates -> d25 dedup -> d27 rebalance -> d13 split; " +
+        "<out>/dispositions + <out>/corpus")(curate),
+    Verb("decontam", "<corpusDir>", "<outDir>",
+      flags = Seq(Flag("--n", "tokens", Int1, _ => Some(8))),
+      doc = "d30+d32: <out>/eval_report + <out>/train_dispositions")(decontam),
+    Verb("bpetrain", "<corpusDir>", "<outDir>", flags = Seq(
+        Flag("--merges", "k", Int1, _ => Some(32000)),
+        Flag("--min-count", "n", Long1, _ => Some(1L))),
+      doc = "d29: one corpus pass + driver merge loop -> merge table")(bpeTrain),
+    Verb("tokenize", "<corpusDir> <mergesDir>", "<outDir>",
+      doc = "d29b: per-doc BPE token counts off a stored merge table")(tokenize),
+    Verb("pack", "<corpusDir>", "<outDir>",
+      flags = Seq(Flag("--seq-len", "tokens", Long1, _ => Some(2048L))),
+      doc = "d26: fixed-length sequences with per-slice provenance")(pack),
+    Verb("overlap", "<corpusDir>", "<outDir>",
+      doc = "d41: cross-source overlap matrix (sizes, shared, Jaccard)")(overlap),
+    Verb("select", "<corpusDir>", "<outDir>",
+      flags = Seq(Flag("--frac", "f", Frac, _ => Some(0.25))),
+      doc = "d42: best-quality docs up to frac of corpus tokens")(select),
+    Verb("semdedup", "<embeddingsDir>", "<outDir>",
+      flags = Seq(Flag("--tau", "t", Frac, _ => Some(0.45))),
+      doc = "s09: SemDeDup disposition over an embeddings table")(semDedup),
+    Verb("semdecontam", "<trainEmbDir> <evalEmbDir>", "<outDir>",
+      flags = Seq(Flag("--tau", "t", Frac,
+        _ => Some(EmbeddingQueries.semDecTau))),
+      doc = "s10: train vectors too close to eval vectors, with witness")(
+      semDecontam),
+    Verb("dsir", "<rawCorpusDir> <targetCorpusDir>", "<outDir>",
+      doc = "d46: DSIR importance weights of raw docs vs a target")(dsir),
+    Verb("cluster", "<corpusDir>", "<outDir>",
+      doc = "d48: domain cluster per doc + dominant-source census")(cluster),
+    Verb("bm25index", "<corpusDir>", "<outDir>",
+      doc = "d58 build: postings + stored df + collection stats")(bm25Index),
+    Verb("bm25", "<indexDir> <probesDir>", "<outDir>", flags = Seq(topK),
+      doc = "d58 probe: BM25 top-k per (query_id, qtext) probe")(bm25),
+    Verb("ivftrain", "<embeddingsDir>", "<outDir>",
+      doc = "train the s04 coarse quantizer once -> stored centroids")(ivfTrain),
+    Verb("ivfindex", "<embeddingsDir> <centroidsDir>", "<outDir>",
+      doc = "assign vectors to cells under stored centroids, " +
+        "partitioned by cell")(ivfIndex),
+    Verb("ann", "<embeddingsDir>", "<outDir>", flags = Seq(topK,
+        Flag("--queries", "dir", InDir), Flag("--nqueries", "n", Int1,
+          _ => Some(20)), Flag("--centroids", "dir", InDir),
+        Flag("--index", "dir", InDir)),
+      doc = "s04 IVF rank table; --centroids/--index probe stored " +
+        "artifacts")(ann),
+    Verb("fuse", "<ranksDir> <ranksDir>...", "<outDir>", flags = Seq(topK),
+      doc = "d59: RRF-fuse at least two stored rank tables")(fuse),
+    Verb("salvage", "<corpusDir>", "<outDir>", flags = Seq(
+        Flag("--quality-min", "q", Frac, _ => Some(0.5)), sep),
+      doc = "d50: keep above-bar paragraphs; writes a manifest, not a " +
+        "corpus")(salvage))
+
+  private[graft] val usage: String =
+    verbs.map("  " + _.usage).mkString("usage:\n", "\n", "")
+
+  /** Run one CLI invocation against an existing session; returns the
+    * lines a terminal user would see (printed by [[main]]). Separated so
+    * the spec can drive the full command surface on the shared test
+    * session with a controlled environment. */
+  def run(spark: SparkSession, args: Seq[String],
+      env: Map[String, String] = sys.env): Seq[String] = {
+    val cfg = EtlConfig.fromEnv(env)
+    // $GRAFT_CHECKPOINT_DIR routes every engine materialization through
+    // reliable checkpoint() (see [[Materialize]]) so the iterative and
+    // disposition verbs survive executor loss on a cluster. Explicitly
+    // unset otherwise: a later run() on the same session must not
+    // inherit a previous invocation's (possibly deleted) directory.
+    env.get("GRAFT_CHECKPOINT_DIR").filter(_.trim.nonEmpty) match {
+      case Some(d) => spark.conf.set(Materialize.DirKey, d)
+      case None => spark.conf.unset(Materialize.DirKey)
+    }
+    val matching = verbs.filter(v => args.startsWith(v.words))
+    if (matching.isEmpty) fail(usage)
+    // a verb with two modes (stream) is told apart by its required flags
+    val verb = matching.sortBy(-_.flags.count(_.required))
+      .find(_.flags.forall(f => !f.required || args.contains(f.name)))
+      .getOrElse(matching.head)
+    verb.body(parse(verb, args.drop(verb.words.size).toList, spark, cfg, env))
+  }
+
+  /** Split, check and guard one verb's arguments — all before the body
+    * starts any job. A typo'd flag or value refuses loudly instead of
+    * producing a plausible-but-wrong artifact. */
+  private def parse(v: Verb, args: List[String], spark: SparkSession,
+      cfg: EtlConfig, env: Map[String, String]): Args = {
+    val byName = v.flags.map(f => f.name -> f).toMap
+    val switches = Set.newBuilder[String]
+    val named = Map.newBuilder[String, String]
+    val pos = Vector.newBuilder[String]
+    val unknown = Vector.newBuilder[String]
+    var rest = args
+    while (rest.nonEmpty) {
+      val t = rest.head
+      rest = rest.tail
+      if (v.switches.contains(t)) switches += t
+      else if (byName.contains(t)) {
+        if (rest.isEmpty) fail(s"${v.name}: flag $t needs a value\n  ${v.usage}")
+        named += t -> rest.head
+        rest = rest.tail
+      } else if (t.startsWith("-")) unknown += t
+      else pos += t
+    }
+    val bad = unknown.result()
+    val accepted = v.switches ++ v.flags.map(_.name)
+    if (bad.nonEmpty)
+      fail(s"${v.name}: unknown flag(s) ${bad.mkString(", ")} — accepted: " +
+        (if (accepted.isEmpty) "none" else accepted.mkString(", ")) +
+        s"\n  ${v.usage}")
+    val values = named.result()
+    v.flags.find(f => f.required && !values.contains(f.name)).foreach(f =>
+      fail(s"${v.name}: missing required flag ${f.name}\n  ${v.usage}"))
+    val p = pos.result()
+    val (many, one) = v.positional.partition(_.contains("..."))
+    val least = one.size + many.count(!_.startsWith("["))
+    if (p.size < least || (many.isEmpty && p.size > least))
+      fail(s"${v.name} needs ${v.positional.mkString(" ")}, got ${p.size} " +
+        s"positional argument(s)\n  ${v.usage}")
+    val typed = values.map { case (f, raw) =>
+      f -> byName(f).kind.parse(raw).getOrElse(
+        fail(s"${v.name}: $f must be ${byName(f).kind.what}, got '$raw'"))
+    }
+    if (v.overwrite) {
+      // a variadic input name labels every value it takes
+      val names = v.positional.init.padTo(p.size - 1, v.positional.init.last)
+      def label(name: String) = name.stripPrefix("<")
+        .takeWhile(_ != '>').stripSuffix("Dir")
+      guardOutputClash(spark, v.name, p.last,
+        names.map(label).zip(p.init) ++ v.flags.filter(_.kind == InDir)
+          .flatMap(f => values.get(f.name).map(f.name.stripPrefix("--") -> _)))
+    }
+    new Args(spark, cfg, env, p, switches.result(), typed,
+      v.flags.flatMap(f => f.default(spark).map(f.name -> _)).toMap)
+  }
+
+  /** The row census of `c`, 0 for an absent value. */
+  private def census(df: DataFrame, c: String): Map[String, Long] =
+    df.groupBy(c).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
 
   /** Parse-and-count one input (file, directory, or URI): the reference
     * aggregator's observable effect minus its staging files — under this
@@ -138,1143 +292,425 @@ object Main {
       .parse(spark.read.textFile(in).toDF("value"), dropMalformed = true)
       .count()
 
-  /** Run one CLI invocation against an existing session; returns the
-    * lines a terminal user would see (printed by [[main]]). Separated so
-    * the spec can drive the full command surface on the shared test
-    * session with a controlled environment. */
-  def run(spark: SparkSession, args: Seq[String],
-      env: Map[String, String] = sys.env): Seq[String] = {
-    val cfg = EtlConfig.fromEnv(env)
-    // $GRAFT_CHECKPOINT_DIR: reliable-checkpoint knob (see [[Materialize]])
-    // — on a real cluster the iterative/disposition commands (dedup,
-    // curate, the component loops) must survive executor loss, which
-    // localCheckpoint's executor-resident blocks cannot. Setting the dir
-    // routes every engine materialization through reliable checkpoint().
-    env.get("GRAFT_CHECKPOINT_DIR").filter(_.trim.nonEmpty) match {
-      case Some(d) => spark.conf.set(Materialize.DirKey, d)
-      // explicit unset: a second run() on a long-lived session without
-      // the var must revert to the local fast path, not inherit the
-      // previous invocation's (possibly deleted) directory
-      case None => spark.conf.unset(Materialize.DirKey)
-    }
-    args.toList match {
-      case "aggregate" :: "s3" :: rest =>
-        val opts = flags(rest)
-        val (bucket, key) = (req(opts, "-b"), req(opts, "-k"))
-        // the region flag is APPLIED, not just parsed for arg parity
-        // (main.rs:10-17): it rides the FS config, since an s3a:// path
-        // carries no region of its own
-        spark.sparkContext.hadoopConfiguration
-          .set("fs.s3a.endpoint.region", req(opts, "-r"))
-        val n = aggregateCount(spark, s"s3a://$bucket/$key")
-        Seq(s"$n of lines processed")
-      case "aggregate" :: "local" :: inputs if inputs.nonEmpty =>
-        // EVERY directory arg expands to its plain files (main.rs:60-90
-        // walks each input), preserving the per-FILE printed-count
-        // contract for multi-arg invocations; an unreadable directory
-        // (listFiles == null) reports the failure line, same as any
-        // other bad input
-        inputs.flatMap { in =>
-          def count(path: String): String =
-            try s"${aggregateCount(spark, path)} of lines processed for input $path"
-            catch { case scala.util.control.NonFatal(_) =>
-              s"process failed input $path" } // main.rs:73,86 parity
-          val f = new java.io.File(in)
-          if (f.isDirectory) Option(f.listFiles) match {
-            case Some(fs) =>
-              fs.toSeq.filter(_.isFile).map(_.toString).sorted.map(count)
-            case None => Seq(s"process failed input $in")
-          }
-          else Seq(count(in))
-        }
-      case "transform" :: rest =>
-        val opts = flags(rest)
-        val out = opts.getOrElse("-o",
-          env.getOrElse("S3LOGS_TRANSFORM_PARQUET_ROOT_PATH",
-            fail("transform needs -o <outDir> or " +
-              "$S3LOGS_TRANSFORM_PARQUET_ROOT_PATH")))
-        val inputs =
-          if (opts.positional.nonEmpty) opts.positional
-          else Seq(env.getOrElse("S3LOGS_STAGGING_ROOT_PATH",
-            fail("transform needs input paths or $S3LOGS_STAGGING_ROOT_PATH")))
-        opts.named.get("--loop") match {
-          case None =>
-            val stats = Transform.run(spark, inputs, out, cfg)
-            Seq(s"transform task ended, ${stats.inputLines} lines processed")
-          case Some(secs) =>
-            transformLoop(spark, inputs, out, cfg, secs.toLong,
-              opts.named.get("--iterations").map(_.toInt))
-        }
-      case "ingest" :: rest
-          if flags(rest.filterNot(_ == "--once")).positional.size == 3 =>
-        // training-corpus ingestion: JSON-lines crawl drop → content-
-        // fingerprint dedup within the watermark → lang-partitioned
-        // parquet corpus (graft.streaming.DocumentIngest); --once drains
-        // the backlog and exits like the stream command. --sigs <dir>
-        // additionally maintains the d16 signature-table artifact per
-        // micro-batch (the incremental-dedup producer); --spansigs <dir>
-        // the d36 SPAN-signature sidecar (paragraphs on --span-sep,
-        // default blank line — the incremental span-dedup producer).
-        val iOpts = flags(rest.filterNot(_ == "--once"))
-        val Seq(drop, corpus, checkpoint) = iOpts.positional
-        val ingestStream = graft.streaming.DocumentIngest.stream(spark, drop)
-        val sigDir = iOpts.named.get("--sigs")
-        val spanSigDir = iOpts.named.get("--spansigs")
-        // --winnowsigs <dir>: the d53/d54 winnowed-fp index sidecar —
-        // each micro-batch winnows itself once and appends its selected
-        // (doc_id, fp, df) rows (df batch-local; global after compact's
-        // fold); the standing table is what winnowMatches probes, so
-        // the lake is never re-winnowed and never re-censused
-        val winnowDir = iOpts.named.get("--winnowsigs")
-        // --repsigs <dir>: the d16/d24 probe-ready rep-index sidecar —
-        // each micro-batch signs itself once and appends rep-grain
-        // (fp, rep, mh, bands, bucket_ns, split) rows (rep/occupancy
-        // batch-local; global after compact's fold); the standing table
-        // is what incrementalMatchesIndexed probes, so the corpus is
-        // never re-collapsed or re-bucket-counted per ingest
-        val repSigDir = iOpts.named.get("--repsigs")
-        // --decontam <dir>: the d39 ingest gate — per micro-batch,
-        // disposition the batch's train-side docs against the standing
-        // eval n-gram artifact (<dir>/evalsigs) and fold the batch's
-        // eval side into it; reports land at <dir>/report/batch=<id>
-        val decontamDir = iOpts.named.get("--decontam")
-        // --decontam-n: the gate's n-gram width (default 8, the d30/d32
-        // default); the artifact is self-describing, so a width change
-        // against a standing artifact refuses loudly instead of
-        // silently matching nothing
-        val decontamN = iOpts.named.get("--decontam-n").map { v =>
-          val dn = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"ingest: --decontam-n must be an integer, got '$v'")
-          }
-          if (dn < 1) fail(s"ingest: --decontam-n must be >= 1, got $v")
-          dn
-        }.getOrElse(8)
-        // --quality-min <score>: the ingest-time d09 quality gate —
-        // same shared formula curate thresholds, applied per micro-
-        // batch BEFORE the corpus append and every sidecar; --rejects
-        // <dir> additionally quarantines dropped (doc_id, quality)
-        // rows per batch (replay-idempotent overwrite partitions)
-        val qualityMin = iOpts.named.get("--quality-min").map { v =>
-          val q = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"ingest: --quality-min must be a number, got '$v'")
-          }
-          if (q <= 0.0 || q > 1.0)
-            fail(s"ingest: --quality-min must be in (0, 1], got $v")
-          q
-        }
-        val rejectsDir = iOpts.named.get("--rejects")
-        if (rejectsDir.nonEmpty && qualityMin.isEmpty)
-          fail("ingest: --rejects needs --quality-min — without a gate " +
-            "nothing is ever rejected")
-        val writer =
-          if (sigDir.isEmpty && spanSigDir.isEmpty && decontamDir.isEmpty &&
-              qualityMin.isEmpty && winnowDir.isEmpty && repSigDir.isEmpty)
-            graft.streaming.DocumentIngest
-              .writer(ingestStream, corpus, checkpoint)
-          else graft.streaming.DocumentIngest.writerWithArtifacts(
-            ingestStream, corpus, sigDir, spanSigDir,
-            iOpts.getOrElse("--span-sep", "\n\n"), checkpoint, decontamDir,
-            decontamN, qualityMin, rejectsDir, winnowDir, repSigDir)
-        val query =
-          if (rest.contains("--once"))
-            writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          else writer.start()
-        query.awaitTermination()
-        Seq("ingest query terminated")
-      case "compact" :: lake :: cols
-          if cols.size == 1 && Compact.sidecarKinds.contains(cols.head) =>
-        // sidecar GENERATION compaction: fold every batch= generation of
-        // a signature artifact into one (the artifact's own read-side
-        // fold + conservation check, both defined next to the commit
-        // machinery — Compact.sidecarKinds). Stops read-side fold cost
-        // and small-file count growing with ingest-batch count forever.
-        val (foldFn, conserveFn) = Compact.sidecarKinds(cols.head)
-        val sst = Compact.sidecar(spark, lake, foldFn, conserveFn,
-          maxRecordsPerFile = cfg.maxRecordsPerFile,
-          compression = cfg.compression)
-        Seq(s"compact task ended, ${sst.rows} rows kept, " +
-          s"${sst.generations0} -> 1 generations, " +
-          s"${sst.files0} -> ${sst.files1} files")
-      case "compact" :: lake :: cols =>
-        // maintenance pass for the streaming lake's small files — the
-        // reference accepts per-rotation small files and leaves cleanup
-        // to operations (scripts/transform.sh runbook); here it is one
-        // engine command. Partition columns default to the lake's own
-        // hive layout, read from the directory names; `--flat` compacts
-        // an UNPARTITIONED dir (the per-micro-batch signature-table
-        // sidecar) — explicit, because silently treating a hive lake as
-        // flat would flatten its layout.
-        val partCols =
-          if (cols == Seq("--flat")) Seq.empty
-          else if (cols.exists(_.startsWith("--")))
-            // a flag mixed into (or typo'd among) the partition-column
-            // list must be a usage error, not a partitionBy("--flat")
-            // AnalysisException
-            fail(s"unexpected flag among partition columns: " +
-              s"${cols.filter(_.startsWith("--")).mkString(" ")}\n$usage")
-          else if (cols.nonEmpty) cols
-          else detectPartitionCols(spark, lake)
-        val st = Compact.run(spark, lake, partCols,
-          maxRecordsPerFile = cfg.maxRecordsPerFile,
-          compression = cfg.compression)
-        Seq(s"compact task ended, ${st.rows} rows kept, " +
-          s"${st.files0} -> ${st.files1} files")
-      case "dedup" :: rest =>
-        // the d25 (or, with --best, d34) disposition as a pipeline
-        // command: one artifact write, decision counts on stdout.
-        // --best chooses each content cluster's canonical by d09
-        // quality instead of min doc_id — the emission policy when the
-        // cleanest capture should win.
-        // overwrite guard: the disposition frame is checkpoint-backed,
-        // so Spark's own "cannot overwrite a path being read from"
-        // check never fires — an out == corpus typo would replace the
-        // documents with the disposition table.
-        val best = rest.contains("--best")
-        val (corpus, out) = flags(rest.filterNot(_ == "--best"))
-          .positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"dedup needs <corpusDir> <outDir>\n$usage")
-        }
-        def qualified(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (qualified(out) == qualified(corpus))
-          fail("dedup: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val docs = spark.read.parquet(corpus)
-        // dedupApply/dedupBest refuse duplicate doc_ids (a replayed
-        // corpus), null ids/text, and non-integral id types — before
-        // the pipeline runs, so a refused corpus writes no artifact.
-        val disp =
-          if (best) graft.queries.DedupQueries.dedupBest(
-            docs.select("doc_id", "text"))
-          else graft.queries.DedupQueries.dedupApply(
-            docs.select("doc_id", "text"))
-        // all reads below hit the checkpoint-backed disposition frame —
-        // the dedup pipeline runs once, not once per consumer.
-        val counts = disp.groupBy("status").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val total = counts.values.sum
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        if (best)
-          Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of " +
-            s"$total docs kept (${counts.getOrElse("dup", 0L)} duplicates " +
-            "dropped, best-quality canonicals)")
-        else
-          Seq(s"dedup task ended, ${counts.getOrElse("kept", 0L)} of $total " +
-            s"docs kept (${counts.getOrElse("exact_dup", 0L)} exact, " +
-            s"${counts.getOrElse("near_dup", 0L)} near duplicates dropped)")
-      case "spandedup" :: rest =>
-        // the d28 span disposition as a pipeline command: documents are
-        // split on the LITERAL separator (default blank line — the
-        // paragraph convention of crawled text), cross-doc repeated
-        // spans collapse to their canonical occurrence, and each doc is
-        // rewritten from its kept paragraphs (same separator). Output:
-        // (doc_id, n_paras, n_dropped, chars_dropped, cleaned).
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"spandedup needs <corpusDir> <outDir>\n$usage")
-        }
-        // same overwrite guard as dedup: an out == corpus typo would
-        // replace the documents with the summary table
-        def q2(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q2(out) == q2(corpus))
-          fail("spandedup: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val sep = opts.getOrElse("--sep", "\n\n")
-        val cleaned = graft.queries.DocumentQueries.spanDedupCorpus(
-          spark.read.parquet(corpus).select("doc_id", "text"), sep)
-        cleaned.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        // one aggregate over the (already computed) summary — bounded
-        // driver fetch of four counters, not data. coalesce: sum over
-        // an EMPTY summary (empty corpus) is NULL, and a primitive
-        // getLong on it would NPE the summary line
-        val st = spark.read.parquet(out)
-          .agg(count(lit(1)), coalesce(sum("n_paras"), lit(0L)),
-            coalesce(sum("n_dropped"), lit(0L)),
-            coalesce(sum("chars_dropped"), lit(0L)))
-          .head()
-        Seq(s"spandedup task ended, ${st.getLong(0)} docs, " +
-          s"${st.getLong(2)} of ${st.getLong(1)} paragraphs dropped " +
-          s"(${st.getLong(3)} chars)")
-      case "salvage" :: rest =>
-        // the d50 disposition as a pipeline command: documents split on
-        // the LITERAL separator, paragraphs below the d09 quality bar
-        // dropped, each doc rewritten from its kept paragraphs in
-        // position order. The segment-grain companion to `curate`'s
-        // doc-grain quality gate: a page that would fail whole is
-        // salvaged instead of discarded.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"salvage needs <corpusDir> <outDir>\n$usage")
-        }
-        def q12(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q12(out) == q12(corpus))
-          fail("salvage: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val qmin = opts.named.get("--quality-min").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"salvage: --quality-min must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"salvage: --quality-min must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.5)
-        val sep2 = opts.getOrElse("--sep", "\n\n")
-        val salvaged = graft.queries.DocumentQueries.paragraphSalvage(
-          graft.queries.DocumentQueries.corpusParas(
-            spark.read.parquet(corpus).select("doc_id", "text"), sep2),
-          qmin, sep2)
-        salvaged.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        val sst = spark.read.parquet(out)
-          .agg(count(lit(1)), coalesce(sum("n_paras"), lit(0L)),
-            coalesce(sum("n_dropped"), lit(0L)))
-          .head()
-        Seq(s"salvage task ended, ${sst.getLong(0)} docs, " +
-          s"${sst.getLong(2)} of ${sst.getLong(1)} paragraphs dropped " +
-          s"at quality ${qmin}")
-      case "curate" :: rest =>
-        // the end-to-end curation pipeline as ONE command: quality gate
-        // → language gate → full d25 dedup (exact + near; --best = the
-        // d34 quality-canonical policy) → d27 temperature rebalancing →
-        // d13 split. Writes the per-doc disposition table to
-        // <out>/dispositions and the kept corpus, hive-partitioned by
-        // split, to <out>/corpus — the two artifacts a training run
-        // consumes (the manifest of record and the data itself).
-        val curBest = rest.contains("--best")
-        val opts = flags(rest.filterNot(_ == "--best"))
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"curate needs <corpusDir> <outDir>\n$usage")
-        }
-        def q3(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q3(out) == q3(corpus))
-          fail("curate: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val qmin = opts.named.get("--quality-min").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"curate: --quality-min must be a number, got '$v'")
-          }
-          if (d < 0.0 || d > 1.0)
-            fail(s"curate: --quality-min must be in [0, 1], got $v")
-          d
-        }.getOrElse(0.5)
-        val docs = spark.read.parquet(corpus)
-          .select("doc_id", "lang", "text")
-        // materialized once: three consumers below (artifact write,
-        // counter aggregate, kept-corpus join) — the funnel + dedup
-        // pipeline must run once, not three times. Materialize honors
-        // $GRAFT_CHECKPOINT_DIR → reliable checkpoint on a real cluster.
-        val disp = graft.Materialize(graft.queries.DocumentQueries
-          .curateDispositions(docs, qmin, bestCanonical = curBest))
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/dispositions")
-        val kept = docs.join(
-          disp.filter(col("disposition")
-            .isin("train", "val", "test"))
-            .selectExpr("doc_id", "disposition AS split"),
-          Seq("doc_id"))
-        kept.write.mode("overwrite").partitionBy("split")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/corpus")
-        val counts = disp.groupBy("disposition").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        def n(k: String) = counts.getOrElse(k, 0L)
-        val keptN = n("train") + n("val") + n("test")
-        val total = counts.values.sum
-        val dupCensus =
-          if (curBest) s"${n("dup")} dup (best-quality canonicals), "
-          else s"${n("exact_dup")} exact, ${n("near_dup")} near dup, "
-        Seq(s"curate task ended, $keptN of $total docs kept " +
-          s"(train ${n("train")}, val ${n("val")}, test ${n("test")}; " +
-          s"dropped: ${n("low_quality")} low quality, " +
-          s"${n("unknown_lang")} unknown lang, " + dupCensus +
-          s"${n("sampled_out")} sampled out)")
-      case "decontam" :: rest =>
-        // benchmark decontamination over a split corpus, both
-        // directions in one command: <out>/eval_report = d30 (how
-        // compromised each val/test doc's benchmark reading is) and
-        // <out>/train_dispositions = d32 (the keep/drop rewrite that
-        // makes the benchmark clean again). The split is the d13
-        // content-hash assignment, recomputed — no split column needs
-        // to exist in the corpus.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"decontam needs <corpusDir> <outDir>\n$usage")
-        }
-        def q4(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q4(out) == q4(corpus))
-          fail("decontam: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        // --n: the n-gram width (default 8; web-scale decontamination
-        // writeups use 13 — the knob exists for corpora long enough)
-        val nGram = opts.named.get("--n").map { v =>
-          val n = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"decontam: --n must be an integer, got '$v'")
-          }
-          if (n < 1) fail(s"decontam: --n must be >= 1, got $v")
-          n
-        }.getOrElse(8)
-        val corpusDf = spark.read.parquet(corpus).select("doc_id", "text")
-        // ONE n-gram fingerprint pass feeds BOTH directions: d30 and d32
-        // each need the full (doc_id, split, fp) table, and the corpus
-        // scan + fingerprinting dominates each, so the one-command path
-        // materializes the narrow fp frame once (text never in it)
-        // instead of scanning + fingerprinting the corpus twice.
-        // Sharing the DEFINITION (splitNgramFps) keeps the directions
-        // agreeing; sharing the PASS halves the command. Spec-pinned:
-        // MainSpec asserts zero corpus re-scans in the write actions.
-        val grams = graft.Materialize(graft.queries.DocumentQueries
-          .splitNgramFps(corpusDf, nGram))
-        val report = graft.queries.DocumentQueries
-          .ngramDecontaminationFromFps(grams)
-        report.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/eval_report")
-        val remediation = graft.queries.DocumentQueries
-          .trainDecontaminationFromFps(grams)
-        remediation.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(s"$out/train_dispositions")
-        // bounded driver fetches over the written artifacts: four
-        // counters, not data. coalesce: a corpus with no eval (or no
-        // train) docs yields an empty artifact, whose sum is NULL —
-        // a primitive getLong on it would NPE the summary line
-        val ev = spark.read.parquet(s"$out/eval_report")
-          .agg(count(lit(1)),
-            coalesce(sum(when(col("n_hit") > 0, 1L)
-              .otherwise(0L)), lit(0L))).head
-        val tr = spark.read.parquet(s"$out/train_dispositions")
-          .agg(count(lit(1)),
-            coalesce(sum(when(col("disposition") ===
-              "drop", 1L).otherwise(0L)), lit(0L))).head
-        Seq(s"decontam task ended, ${ev.getLong(1)} of ${ev.getLong(0)} " +
-          s"eval docs compromised; drop ${tr.getLong(1)} of " +
-          s"${tr.getLong(0)} train docs to remediate")
-      case "bpetrain" :: rest =>
-        // d29 as a pipeline command, on the PRODUCTION path
-        // (DocumentQueries.bpeMergesDriver): ONE distributed
-        // word-frequency pass over the corpus, then the merge loop in
-        // driver memory over the Heaps-bounded distinct-word table —
-        // the SCALE.md-measured shape for real merge counts (the
-        // relational loop's ~0.2 s/round scheduling floor × 32k rounds
-        // would be hours; the driver loop trains a full table in
-        // seconds). Writes the merge table parquet: the artifact d29b
-        // tokenization and any BPE runtime consume.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"bpetrain needs <corpusDir> <outDir>\n$usage")
-        }
-        def q6(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q6(out) == q6(corpus))
-          fail("bpetrain: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the corpus")
-        val kMerges = opts.named.get("--merges").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"bpetrain: --merges must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"bpetrain: --merges must be >= 1, got $v")
-          k
-        }.getOrElse(32000)
-        // --min-count: the web-scale collect floor (see bpeMergesDriver
-        // scaladoc) — prune words rarer than this BEFORE the driver
-        // collect; 1 (the default) collects everything
-        val minCount = opts.named.get("--min-count").map { v =>
-          val m = try v.toLong catch {
-            case _: NumberFormatException =>
-              fail(s"bpetrain: --min-count must be an integer, got '$v'")
-          }
-          if (m < 1) fail(s"bpetrain: --min-count must be >= 1, got $v")
-          m
-        }.getOrElse(1L)
-        val table = graft.queries.DocumentQueries.bpeMergesDriver(
-          spark.read.parquet(corpus).select("doc_id", "text"), kMerges,
-          minCount)
-        // the merge table is a driver-local relation: count it directly
-        // (near-free) rather than re-reading the written parquet
-        val trained = table.count()
-        table.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val exhausted =
-          if (trained < kMerges) s" (pairs exhausted before $kMerges)"
-          else ""
-        Seq(s"bpetrain task ended, $trained merges trained$exhausted")
-      case "tokenize" :: rest =>
-        // d29b off the saved bpetrain artifact: per-doc token counts
-        // under an already-trained merge table — the apply side of the
-        // tokenizer pipeline (bpetrain writes the table, tokenize
-        // consumes it; no training runs here). One broadcast of the
-        // k-row merge table + one tokenize pass over the Heaps-bounded
-        // distinct-word table + one broadcast join over the term stream.
-        val opts = flags(rest)
-        val (corpus, mergesDir, out) = opts.positional match {
-          case Seq(c, m, o) => (c, m, o)
-          case _ => fail(s"tokenize needs <corpusDir> <mergesDir> <outDir>\n$usage")
-        }
-        def q7(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q7(out) == q7(corpus) || q7(out) == q7(mergesDir))
-          fail("tokenize: the output dir must differ from the corpus " +
-            "and merges dirs — overwrite would destroy an input")
-        val counts = graft.queries.DocumentQueries.bpeTokenCountsFromMerges(
-          spark.read.parquet(corpus).select("doc_id", "text"),
-          spark.read.parquet(mergesDir))
-        counts.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        val tc = spark.read.parquet(out)
-          .agg(count(lit(1)), coalesce(sum("n_bpe_tokens"), lit(0L))).head
-        Seq(s"tokenize task ended, ${tc.getLong(1)} bpe tokens over " +
-          s"${tc.getLong(0)} docs")
-      case "pack" :: rest =>
-        // the d26 sequence packing as a pipeline command: the curated
-        // corpus laid end to end in doc_id order and cut into fixed
-        // seqLen-token training sequences, written as the provenance
-        // slice table a data loader consumes (seq_id, doc_id,
-        // doc_start, seq_start, n_toks). nBuckets follows the session's
-        // parallelism — the packing result is provably bucket-count-
-        // independent (spec-pinned), so this is a tuning knob only.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"pack needs <corpusDir> <outDir>\n$usage")
-        }
-        def q5(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q5(out) == q5(corpus))
-          fail("pack: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val seqLen = opts.named.get("--seq-len").map { v =>
-          val n = try v.toLong catch {
-            case _: NumberFormatException =>
-              fail(s"pack: --seq-len must be an integer, got '$v'")
-          }
-          if (n <= 0) fail(s"pack: --seq-len must be positive, got $v")
-          n
-        }.getOrElse(2048L)
-        val slices = graft.queries.DocumentQueries.packSequences(
-          spark.read.parquet(corpus).select("doc_id", "text"),
-          seqLen = seqLen,
-          nBuckets = spark.sparkContext.defaultParallelism)
-        slices.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        // census off the written artifact (coalesce: empty corpus sums
-        // NULL, the spandedup/decontam lesson)
-        val pc = spark.read.parquet(out)
-          .agg(coalesce(org.apache.spark.sql.functions.countDistinct(
-            col("seq_id")), lit(0L)),
-            coalesce(org.apache.spark.sql.functions.countDistinct(
-              col("doc_id")), lit(0L)),
-            coalesce(sum("n_toks"), lit(0L))).head
-        Seq(s"pack task ended, ${pc.getLong(2)} tokens from " +
-          s"${pc.getLong(1)} docs packed into ${pc.getLong(0)} " +
-          s"sequences of $seqLen")
-      case "overlap" :: rest =>
-        // the d41 cross-source overlap census as a pipeline command:
-        // the full source-pair matrix (distinct-fp sizes, shared count,
-        // Jaccard) — the planning artifact a curation run reads before
-        // deciding which dumps to drop. Prints the worst offender.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"overlap needs <corpusDir> <outDir>\n$usage")
-        }
-        def q6(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q6(out) == q6(corpus))
-          fail("overlap: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val matrix = graft.queries.DocumentQueries.sourceOverlap(
-          spark.read.parquet(corpus).select("doc_id", "text", "source"))
-        matrix.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val written = spark.read.parquet(out)
-        val nPairs = written.count()
-        val top = written.orderBy(col("jaccard").desc, col("src_a"),
-          col("src_b")).limit(1).collect().headOption
-        val topLine = top.map(r => s"; max overlap ${r.getString(0)}~" +
-          s"${r.getString(1)} jaccard ${r.getDouble(5)} " +
-          s"(${r.getLong(4)} shared)").getOrElse("")
-        Seq(s"overlap task ended, $nPairs source pairs$topLine")
-      case "select" :: rest =>
-        // the d42 token-budget selection as a pipeline command: keep the
-        // best-quality documents until the cumulative token count
-        // reaches --frac of the corpus total; writes the selected
-        // corpus rows (original columns + quality + cum_tok) — the
-        // "best data under a compute budget" emission step.
-        val opts = flags(rest)
-        val (corpus, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"select needs <corpusDir> <outDir>\n$usage")
-        }
-        def q7(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q7(out) == q7(corpus))
-          fail("select: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the corpus")
-        val frac = opts.named.get("--frac").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"select: --frac must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"select: --frac must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.25)
-        val docs = spark.read.parquet(corpus)
-        val sel = graft.queries.DocumentQueries.budgetSelect(
-          docs.select("doc_id", "text"), frac = frac,
-          nBuckets = spark.sparkContext.defaultParallelism)
-        docs.join(sel.select("doc_id", "quality", "cum_tok"), Seq("doc_id"))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .parquet(out)
-        val total = docs.count()
-        val sc = spark.read.parquet(out)
-          .agg(count(lit(1)), coalesce(max("cum_tok"), lit(0L))).head
-        Seq(s"select task ended, ${sc.getLong(0)} of $total docs kept " +
-          s"(${sc.getLong(1)} tokens, frac $frac of corpus)")
-      case "semdedup" :: rest =>
-        // the s09 SemDeDup disposition as a pipeline command over an
-        // embeddings table (vec_id, embedding): cluster with the trained
-        // coarse quantizer, drop the redundant member of every
-        // within-cell similar pair. Writes the full disposition (the
-        // manifest a corpus join consumes via vec_id).
-        val opts = flags(rest)
-        val (emb, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"semdedup needs <embeddingsDir> <outDir>\n$usage")
-        }
-        def q8(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q8(out) == q8(emb))
-          fail("semdedup: the output dir must differ from the embeddings " +
-            "dir — overwrite would destroy the table")
-        val tau = opts.named.get("--tau").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"semdedup: --tau must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"semdedup: --tau must be in (0, 1], got $v")
-          d
-        }.getOrElse(0.45)
-        val vecs = spark.read.parquet(emb)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val disp = graft.queries.EmbeddingQueries.semDedup(vecs, tau)
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val dc = spark.read.parquet(out).groupBy("decision").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totalV = dc.values.sum
-        Seq(s"semdedup task ended, ${dc.getOrElse("keep", 0L)} of $totalV " +
-          s"vectors kept (${dc.getOrElse("drop", 0L)} semantic duplicates " +
-          s"dropped at tau $tau)")
-      case "semdecontam" :: rest =>
-        // the s10 disposition as a pipeline command: train the coarse
-        // quantizer on the train embeddings, probe the eval embeddings
-        // into their nprobe nearest cells, and write the full train-side
-        // disposition (decision/witness/n_hits — the manifest a corpus
-        // join consumes via vec_id) plus a contamination census.
-        val opts = flags(rest)
-        val (trainDir, evalDir, out) = opts.positional match {
-          case Seq(t, e, o) => (t, e, o)
-          case _ =>
-            fail(s"semdecontam needs <trainEmbDir> <evalEmbDir> <outDir>\n$usage")
-        }
-        def q9(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q9(out) == q9(trainDir) || q9(out) == q9(evalDir))
-          fail("semdecontam: the output dir must differ from both " +
-            "embeddings dirs — overwrite would destroy a table")
-        val tau = opts.named.get("--tau").map { v =>
-          val d = try v.toDouble catch {
-            case _: NumberFormatException =>
-              fail(s"semdecontam: --tau must be a number, got '$v'")
-          }
-          if (d <= 0.0 || d > 1.0)
-            fail(s"semdecontam: --tau must be in (0, 1], got $v")
-          d
-        }.getOrElse(graft.queries.EmbeddingQueries.semDecTau)
-        def vecTable(dir: String) = spark.read.parquet(dir)
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val disp = graft.queries.EmbeddingQueries
-          .semDecontam(vecTable(trainDir), vecTable(evalDir), tau)
-        disp.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val dc = spark.read.parquet(out).groupBy("decision").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totalV = dc.values.sum
-        Seq(s"semdecontam task ended, ${dc.getOrElse("drop", 0L)} of " +
-          s"$totalV train vectors semantically contaminated at tau $tau " +
-          s"(${dc.getOrElse("keep", 0L)} clean)")
-      case "dsir" :: rest =>
-        // d46 as a pipeline command: score every raw-corpus doc by the
-        // DSIR log importance ratio against the target corpus and write
-        // the (doc_id, log_ratio, n_feats) manifest — the ranking a
-        // budget cut (`select`-style consumers) or weighted sampler
-        // reads. Both inputs are documents-schema parquet dirs.
-        val opts = flags(rest)
-        val (rawDir, tgtDir, out) = opts.positional match {
-          case Seq(r, t, o) => (r, t, o)
-          case _ =>
-            fail(s"dsir needs <rawCorpusDir> <targetCorpusDir> <outDir>\n$usage")
-        }
-        def q10(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q10(out) == q10(rawDir) || q10(out) == q10(tgtDir))
-          fail("dsir: the output dir must differ from both corpus dirs " +
-            "— overwrite would destroy a table")
-        def corpus(dir: String) =
-          spark.read.parquet(dir).select(col("doc_id"), col("text"))
-        val weights = graft.queries.DocumentQueries
-          .dsirWeights(corpus(rawDir), corpus(tgtDir))
-        weights.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val census = spark.read.parquet(out)
-          .agg(count(lit(1)), avg(col("log_ratio")), max(col("log_ratio")))
-          .head()
-        // avg/max are NULL over an empty manifest (raw dir empty or every
-        // doc token-free) — the zero-row summary must not NPE on them
-        if (census.getLong(0) == 0L) Seq("dsir task ended, 0 raw docs scored")
-        else Seq(f"dsir task ended, ${census.getLong(0)} raw docs scored " +
-          f"(mean log-ratio ${census.getDouble(1)}%.4f, " +
-          f"best ${census.getDouble(2)}%.4f)")
-      case "cluster" :: rest =>
-        // d48 as a pipeline command: assign every doc to its hashed-
-        // feature domain cluster and write the assignment manifest; the
-        // census line reads cluster sizes with each cluster's dominant
-        // source when the corpus carries one (the domain-mixture
-        // planning readout).
-        val opts = flags(rest)
-        val (corpusDir, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"cluster needs <corpusDir> <outDir>\n$usage")
-        }
-        def q11(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q11(out) == q11(corpusDir))
-          fail("cluster: the output dir must differ from the corpus dir " +
-            "— overwrite would destroy the table")
-        val corpusDf = spark.read.parquet(corpusDir)
-        val assign = graft.queries.DocumentQueries
-          .domainClusters(corpusDf.select(col("doc_id"), col("text")))
-        assign.write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val saved = spark.read.parquet(out)
-        val sizes = saved.groupBy("cluster").count()
-          .orderBy(col("count").desc, col("cluster"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1))
-        val domin =
-          if (corpusDf.columns.contains("source"))
-            saved.join(corpusDf.select(col("doc_id"), col("source")), "doc_id")
-              .groupBy("cluster", "source").count()
-              .collect()
-              .groupBy(_.getLong(0))
-              .map { case (cl, rows) =>
-                cl -> rows.maxBy(r => (r.getLong(2), r.getString(1)))
-                  .getString(1)
-              }
-          else Map.empty[Long, String]
-        val head = sizes.take(3).map { case (cl, n) =>
-          domin.get(cl).map(src => s"$cl:$n($src)").getOrElse(s"$cl:$n")
-        }.mkString(", ")
-        Seq(s"cluster task ended, ${sizes.map(_._2).sum} docs over " +
-          s"${sizes.length} clusters (largest $head)")
-      case "bm25index" :: rest =>
-        // d58 build half as a pipeline command: write the persistable
-        // inverted-index artifact (postings + stored df + collection
-        // scalars) the `bm25` probe verb reads — built once per corpus,
-        // the d16/d54 artifact discipline at the retrieval axis.
-        val opts = flags(rest)
-        val (corpusDir, out) = opts.positional match {
-          case Seq(c, o) => (c, o)
-          case _ => fail(s"bm25index needs <corpusDir> <outDir>\n$usage")
-        }
-        def q12(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q12(out) == q12(corpusDir))
-          fail("bm25index: the output dir must differ from the corpus " +
-            "dir — overwrite would destroy the table")
-        graft.queries.DocumentQueries.bm25Index(
-            spark.read.parquet(corpusDir).select(col("doc_id"), col("text")))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val idx = spark.read.parquet(out)
-        val c0 = idx.agg(count(lit(1)),
-          count_distinct(col("term")), max(col("n_docs"))).head
-        if (c0.getLong(0) == 0L) Seq("bm25index task ended, empty corpus")
-        else Seq(s"bm25index task ended, ${c0.getLong(0)} postings over " +
-          s"${c0.getLong(1)} terms (${c0.getLong(2)} docs)")
-      case "bm25" :: rest =>
-        // d58 probe half: score a probe batch (parquet with query_id,
-        // qtext) against a stored index; a postings table without the
-        // stored df/stats refuses inside bm25Probe.
-        val opts = flags(rest)
-        val (idxDir, probesDir, out) = opts.positional match {
-          case Seq(i, p, o) => (i, p, o)
-          case _ => fail(s"bm25 needs <indexDir> <probesDir> <outDir>\n$usage")
-        }
-        def q13(p: String) = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .makeQualified(hp)
-        }
-        if (q13(out) == q13(idxDir) || q13(out) == q13(probesDir))
-          fail("bm25: the output dir must differ from the index and " +
-            "probes dirs — overwrite would destroy a table")
-        val topK = opts.named.get("--topk").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"bm25: --topk must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"bm25: --topk must be >= 1, got $v")
-          k
-        }.getOrElse(graft.queries.QueryConf.bm25TopK(spark))
-        val probes = spark.read.parquet(probesDir)
-        if (!Seq("query_id", "qtext").forall(probes.columns.contains))
-          fail("bm25: the probes table needs (query_id, qtext) columns")
-        graft.queries.DocumentQueries.bm25Probe(
-            spark.read.parquet(idxDir), probes.select(col("query_id"),
-              col("qtext")), k = topK)
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val res = spark.read.parquet(out)
-        val c1 = res.agg(count(lit(1)), count_distinct(col("query_id"))).head
-        Seq(s"bm25 task ended, ${c1.getLong(0)} results over " +
-          s"${c1.getLong(1)} queries (top-$topK)")
-      case "ivftrain" :: rest =>
-        // the stored coarse-quantizer artifact (r18): train the s04
-        // quantizer on an embeddings lake artifact ONCE (cells/rounds
-        // from the session conf) and write the (cell, cv_sum, cnorm)
-        // table — `ann --centroids` then probes against the STORED
-        // artifact, the d58/s12 build-once convention on the ANN axis.
-        val opts = flags(rest)
-        val (embDir, out) = opts.positional match {
-          case Seq(e, o) => (e, o)
-          case _ => fail(s"ivftrain needs <embeddingsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ivftrain", opts, Set.empty)
-        guardOutputClash(spark, "ivftrain", out, Seq("embeddings" -> embDir))
-        graft.queries.EmbeddingQueries
-          .trainQuantizer(spark.read.parquet(embDir))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val ct = spark.read.parquet(out)
-        Seq(s"ivftrain task ended, ${ct.count()} centroids " +
-          s"(cells=${graft.queries.QueryConf.ivfCells(spark)}, " +
-          s"rounds=${graft.queries.QueryConf.lloydRounds(spark)}; the " +
-          "artifact is only comparable under these knobs)")
-      case "ivfindex" :: rest =>
-        // the corpus-side assignment artifact (r18): assign every
-        // vector to its home cell under a STORED `ivftrain` quantizer
-        // and write Hive-partitioned BY CELL — `ann --index` probes
-        // then read only their probed cells' partitions. The ANN
-        // mirror of `bm25index`'s postings artifact.
-        val opts = flags(rest)
-        val (embDir, centDir, out) = opts.positional match {
-          case Seq(e, c, o) => (e, c, o)
-          case _ =>
-            fail(s"ivfindex needs <embeddingsDir> <centroidsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ivfindex", opts, Set.empty)
-        guardOutputClash(spark, "ivfindex", out,
-          Seq("embeddings" -> embDir, "centroids" -> centDir))
-        // repartition ON the partition key before the partitioned write:
-        // without it every shuffle partition writes a sliver into every
-        // cell= dir (32 tasks x cells files of a few KB each — measured
-        // 2.2x SLOWER to probe than a flat layout at 100k vectors, the
-        // tiny-file open cost swamping the pruning win); with it each
-        // cell's rows land in one task -> one well-sized file per cell,
-        // and the probed-cell scan reads exactly nprobe-ish files
-        // (SCALE.md "ann --index cell pruning"). At lake scale
-        // spark.sql.files.maxRecordsPerFile splits oversized cells.
-        graft.queries.EmbeddingQueries
-          .ivfIndex(spark.read.parquet(embDir), spark.read.parquet(centDir))
-          .repartition(col("cell"))
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .partitionBy("cell")
-          .parquet(out)
-        val ix = spark.read.parquet(out)
-        val cx = ix.agg(count(lit(1)), count_distinct(col("cell"))).head()
-        Seq(s"ivfindex task ended, ${cx.getLong(0)} vectors over " +
-          s"${cx.getLong(1)} cells (partitioned by cell; probe-able only " +
-          "under the centroids it was assigned with)")
-      case "ann" :: rest =>
-        // the semantic half of the hybrid stack (r18): rank query
-        // vectors against an embeddings lake artifact through the s04
-        // trained-IVF scan, writing the (query_id, rk, doc_id, cos_sim)
-        // rank table `fuse` consumes — the production counterpart of
-        // `bm25`'s lexical table. Queries come from --queries <dir>
-        // (their own parquet of vectors — the real deployment shape) or
-        // default to the corpus's first --nqueries vectors (the s04
-        // gate convention, handy for smoke runs). --centroids <dir>
-        // assigns against a STORED `ivftrain` artifact instead of
-        // retraining per call (train once, probe many); --index <dir>
-        // (with --centroids) probes a STORED `ivfindex` assignment —
-        // the corpus is neither trained on nor re-assigned, and the
-        // cell-partitioned layout prunes the scan to probed cells.
-        val opts = flags(rest)
-        val (embDir, out) = opts.positional match {
-          case Seq(e, o) => (e, o)
-          case _ => fail(s"ann needs <embeddingsDir> <outDir>\n$usage")
-        }
-        rejectUnknownFlags("ann", opts,
-          Set("--topk", "--queries", "--nqueries", "--centroids", "--index"))
-        val qDir = opts.named.get("--queries")
-        val cDir = opts.named.get("--centroids")
-        val iDir = opts.named.get("--index")
-        if (iDir.isDefined && cDir.isEmpty)
-          fail("ann: --index needs --centroids — the probe batch assigns " +
-            "against the same stored quantizer the index was built with")
-        // --queries and --nqueries are the SAME choice made two ways: a
-        // silent precedence would rank the wrong query set (self-review)
-        if (qDir.isDefined && opts.named.contains("--nqueries"))
-          fail("ann: --queries and --nqueries are mutually exclusive — " +
-            "an external query table carries its own row set")
-        guardOutputClash(spark, "ann", out,
-          Seq("embeddings" -> embDir) ++ qDir.map("queries" -> _) ++
-            cDir.map("centroids" -> _) ++ iDir.map("index" -> _))
-        def posIntFlag(flag: String, dflt: Int): Int =
-          opts.named.get(flag).map { v =>
-            val k = try v.toInt catch {
-              case _: NumberFormatException =>
-                fail(s"ann: $flag must be an integer, got '$v'")
-            }
-            if (k < 1) fail(s"ann: $flag must be >= 1, got $v")
-            k
-          }.getOrElse(dflt)
-        val topK = posIntFlag("--topk", graft.queries.QueryConf.bm25TopK(spark))
-        val nq = posIntFlag("--nqueries", 20)
-        val corpus = spark.read.parquet(embDir)
-        val queries = qDir.map(spark.read.parquet(_))
-          .getOrElse(corpus.filter(col("vec_id") < nq))
-        // pre-r19 artifacts carry no self-description: the library-level
-        // knob/digest checks are vacuous there, so say so instead of
-        // probing silently (the refusal path needs the stamp to exist)
-        cDir.foreach { d =>
-          if (!spark.read.parquet(d).columns.contains("meta_ver"))
-            System.err.println("[ann] WARNING: centroids artifact at " +
-              s"$d carries no self-description (pre-r19 ivftrain) — a " +
-              "knob mismatch cannot be detected; retrain with ivftrain")
-        }
-        val ranksOut = iDir match {
-          case Some(ix) =>
-            graft.queries.EmbeddingQueries.annRankTableIndexed(
-              spark.read.parquet(ix), queries,
-              spark.read.parquet(cDir.get), k = topK)
-          case None =>
-            graft.queries.EmbeddingQueries.annRankTable(corpus, queries,
-              k = topK, centroids = cDir.map(spark.read.parquet(_)))
-        }
-        ranksOut
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val annRes = spark.read.parquet(out)
-        val cA = annRes.agg(count(lit(1)), count_distinct(col("query_id"))).head
-        Seq(s"ann task ended, ${cA.getLong(0)} results over " +
-          s"${cA.getLong(1)} queries (top-$topK)")
-      case "fuse" :: rest =>
-        // d59: reciprocal-rank fusion over STORED rank tables — the
-        // production hybrid-retrieval step: `bm25` writes the lexical
-        // ranks, any ANN top-k (s01/s04-shaped, renamed to the rank
-        // contract) the semantic ranks, and this fuses N of them. Rank
-        // tables are (query_id, doc_id, rk); rrfFuse refuses anything
-        // else loudly.
-        val opts = flags(rest)
-        if (opts.positional.size < 3)
-          fail(s"fuse needs <ranksDir> <ranksDir>... <outDir> — at least " +
-            s"two rank tables (fusing one list is the identity)\n$usage")
-        val rankDirs = opts.positional.init
-        val out = opts.positional.last
-        // output-clash guard over CANONICAL paths (ADVICE r17; shared
-        // helper since the r18 self-review — see guardOutputClash)
-        guardOutputClash(spark, "fuse", out, rankDirs.map("rank" -> _))
-        val topK2 = opts.named.get("--topk").map { v =>
-          val k = try v.toInt catch {
-            case _: NumberFormatException =>
-              fail(s"fuse: --topk must be an integer, got '$v'")
-          }
-          if (k < 1) fail(s"fuse: --topk must be >= 1, got $v")
-          k
-        }.getOrElse(graft.queries.QueryConf.bm25TopK(spark))
-        graft.queries.DocumentQueries.rrfFuse(
-            rankDirs.map(spark.read.parquet(_)), k = topK2)
-          .write.mode("overwrite")
-          .option("compression", cfg.compression)
-          .parquet(out)
-        val fres = spark.read.parquet(out)
-        val c2 = fres.agg(count(lit(1)), count_distinct(col("query_id"))).head
-        Seq(s"fuse task ended, ${c2.getLong(0)} fused results over " +
-          s"${c2.getLong(1)} queries from ${rankDirs.size} rank tables " +
-          s"(top-$topK2)")
-      case "stream" :: rest if {
-          // the two modes take different positional arities; an arity
-          // that matches NEITHER mode (e.g. --queue-dir plus a landing
-          // dir) must fall through to the usage error, not destructure
-          val opts = flags(rest.filterNot(_ == "--once"))
-          if (opts.named.contains("--queue-dir")) opts.positional.size == 2
-          else opts.positional.size == 3
-        } =>
-        // --once = Trigger.AvailableNow: process the backlog, checkpoint,
-        // exit — the reference's timer-driven lambda transformer shape
-        // (s3log-lambda-transformer on an EventBridge schedule); without
-        // it the query runs continuously like s3logd-stream.
-        //
-        // Two source modes, mirroring the reference's two daemons:
-        //   stream <landingDir> <outDir> <ckpt>       — raw log files land
-        //     in a dir (s3logd-stream's staging shape);
-        //   stream --queue-dir <q> [--objects <dir>] <outDir> <ckpt>
-        //     — S3 event notifications arrive through the graft-queue
-        //     connector (s3logd's SQS poll shape): leases, sink-side ack
-        //     after the transform lands, redelivery on crash. --objects
-        //     maps keys to a local dir; without it keys resolve to
-        //     s3a://bucket/key.
-        val opts = flags(rest.filterNot(_ == "--once"))
-        val writer = opts.named.get("--queue-dir") match {
-          case Some(qdir) =>
-            val Seq(out, checkpoint) = opts.positional
-            // fixed registry name: fine under the CLI's one-command-per-
-            // JVM contract; a second `stream --queue-dir` in the SAME JVM
-            // would re-register "cli" and silently swap the first
-            // stream's queue — embedders must register distinct names
-            graft.sources.QueueRegistry.register("cli",
-              new graft.sources.FileQueue(qdir))
-            val resolve: (String, String) => String =
-              opts.named.get("--objects") match {
-                case Some(dir) => (_, key) => s"$dir/$key"
-                case None => (bucket, key) => s"s3a://$bucket/$key"
-              }
-            StreamingTransform.queueNotificationPipeline(spark, "cli", out,
-              checkpoint, resolve, cfg)
-          case None =>
-            val Seq(landing, out, checkpoint) = opts.positional
-            StreamingTransform.writer(
-              StreamingTransform.stream(spark, landing, cfg), out,
-              checkpoint, cfg)
-        }
-        val query =
-          if (rest.contains("--once"))
-            writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          else writer.start()
-        query.awaitTermination()
-        Seq("stream query terminated")
-      case _ => fail(usage)
+  private def aggregateS3(a: Args): Seq[String] = {
+    // the region flag is APPLIED, not just parsed for arg parity
+    // (main.rs:10-17): it rides the FS config, since an s3a:// path
+    // carries no region of its own
+    a.spark.sparkContext.hadoopConfiguration
+      .set("fs.s3a.endpoint.region", a[String]("-r"))
+    val n = aggregateCount(a.spark, s"s3a://${a[String]("-b")}/${a[String]("-k")}")
+    Seq(s"$n of lines processed")
+  }
+
+  /** Every directory arg expands to its plain files (main.rs:60-90 walks
+    * each input), so the count is per FILE; an unreadable input reports
+    * the failure line (main.rs:73,86 parity). */
+  private def aggregateLocal(a: Args): Seq[String] = a.pos.flatMap { in =>
+    def count(path: String): String =
+      try s"${aggregateCount(a.spark, path)} of lines processed for input $path"
+      catch { case scala.util.control.NonFatal(_) => s"process failed input $path" }
+    val f = new java.io.File(in)
+    if (!f.isDirectory) Seq(count(in))
+    else Option(f.listFiles).fold(Seq(s"process failed input $in"))(
+      _.toSeq.filter(_.isFile).map(_.toString).sorted.map(count))
+  }
+
+  /** With no input, scans $S3LOGS_STAGGING_ROOT_PATH like main.rs:97-101's
+    * `process_stagging_dir`; prints main.rs:99,106's line. */
+  private def transform(a: Args): Seq[String] = {
+    val out = a.opt[String]("-o").getOrElse(
+      a.env.getOrElse("S3LOGS_TRANSFORM_PARQUET_ROOT_PATH",
+        fail("transform needs -o <outDir> or $S3LOGS_TRANSFORM_PARQUET_ROOT_PATH")))
+    val inputs =
+      if (a.pos.nonEmpty) a.pos
+      else Seq(a.env.getOrElse("S3LOGS_STAGGING_ROOT_PATH",
+        fail("transform needs input paths or $S3LOGS_STAGGING_ROOT_PATH")))
+    a.opt[Long]("--loop") match {
+      case None =>
+        val stats = Transform.run(a.spark, inputs, out, a.cfg)
+        Seq(s"transform task ended, ${stats.inputLines} lines processed")
+      case Some(secs) =>
+        transformLoop(a.spark, inputs, out, a.cfg, secs, a.opt[Int]("--iterations"))
     }
   }
 
-  /** `transform --loop <seconds>`: the reference's ops runbook shape
-    * (scripts/transform.sh:19-26 re-invokes `s3logs transform` on a 60 s
-    * timer over the staging dir) as one daemon command.
-    *
-    * Each iteration selects the staging files that pass the age gate
-    * (quiet for >= jobIntervalSeconds — F3, the same mtime rule
-    * [[Transform.run]] applies), transforms EXACTLY those files, and
-    * moves them into a hidden `.processed/` sibling dir — the engine's
-    * analog of the reference's transform_cleanup
-    * (s3logs/src/utils.rs:1273-1294 archives + removes processed staging
-    * files). The move is what makes the loop idempotent AND
-    * restart-safe with no ledger: processed files are invisible to the
-    * next listing (and to Spark's hidden-path filter), whoever does it.
-    *
-    * SIGTERM exits cleanly: the JVM shutdown hook requests a stop and
-    * wakes the sleeper; the loop finishes the current iteration and
-    * returns (files are moved only AFTER their run commits, so a kill
-    * mid-iteration re-processes that batch on restart — append-mode
-    * duplicates, the reference's own crash semantics). `--iterations n`
-    * bounds the loop for tests and one-shot cron runs. */
+  private def streamFiles(a: Args): Seq[String] = {
+    val Seq(landing, out, checkpoint) = a.pos
+    streaming(a, "stream", StreamingTransform.writer(
+      StreamingTransform.stream(a.spark, landing, a.cfg), out, checkpoint, a.cfg))
+  }
+
+  /** Run a streaming query to its end. `--once` = Trigger.AvailableNow:
+    * drain the backlog, checkpoint, exit — the reference's timer-driven
+    * lambda transformer shape; without it the query runs continuously. */
+  private def streaming(a: Args, verb: String,
+      writer: DataStreamWriter[_]): Seq[String] = {
+    (if (a.has("--once")) writer.trigger(Trigger.AvailableNow()) else writer)
+      .start().awaitTermination()
+    Seq(s"$verb query terminated")
+  }
+
+  /** s3logd's SQS poll shape: leases, sink-side ack after the transform
+    * lands, redelivery on crash. `--objects` maps keys to a local dir;
+    * without it keys resolve to s3a://bucket/key. */
+  private def streamQueue(a: Args): Seq[String] = {
+    val Seq(out, checkpoint) = a.pos
+    // fixed registry name: fine under the CLI's one-command-per-JVM
+    // contract; embedders running two queue streams in one JVM must
+    // register distinct names
+    graft.sources.QueueRegistry.register("cli",
+      new graft.sources.FileQueue(a[String]("--queue-dir")))
+    val resolve: (String, String) => String = a.opt[String]("--objects") match {
+      case Some(dir) => (_, key) => s"$dir/$key"
+      case None => (bucket, key) => s"s3a://$bucket/$key"
+    }
+    streaming(a, "stream", StreamingTransform.queueNotificationPipeline(
+      a.spark, "cli", out, checkpoint, resolve, a.cfg))
+  }
+
+  /** Each sidecar flag maintains its artifact per micro-batch: `--sigs`
+    * d16 signatures, `--spansigs` d36 span signatures (split on
+    * `--span-sep`), `--winnowsigs` the d53/d54 winnowed-fp index,
+    * `--repsigs` the d16/d24 rep index, `--decontam` the d39 gate (width
+    * `--decontam-n`). `--quality-min` gates before the corpus and every
+    * sidecar; `--rejects` quarantines what it drops. */
+  private def ingest(a: Args): Seq[String] = {
+    val Seq(drop, corpus, checkpoint) = a.pos
+    val qualityMin = a.opt[Double]("--quality-min")
+    if (a.opt[String]("--rejects").nonEmpty && qualityMin.isEmpty)
+      fail("ingest: --rejects needs --quality-min — without a gate " +
+        "nothing is ever rejected")
+    val Seq(sigs, spanSigs, winnow, repSigs, decontam) = Seq("--sigs",
+      "--spansigs", "--winnowsigs", "--repsigs", "--decontam").map(a.opt[String](_))
+    val docs = graft.streaming.DocumentIngest.stream(a.spark, drop)
+    val writer =
+      if (Seq(sigs, spanSigs, winnow, repSigs, decontam, qualityMin).forall(_.isEmpty))
+        graft.streaming.DocumentIngest.writer(docs, corpus, checkpoint)
+      else graft.streaming.DocumentIngest.writerWithArtifacts(docs, corpus,
+        sigs, spanSigs, a[String]("--span-sep"), checkpoint, decontam,
+        a[Int]("--decontam-n"), qualityMin, a.opt[String]("--rejects"),
+        winnow, repSigs)
+    streaming(a, "ingest", writer)
+  }
+
+  /** `--flat` is explicit because treating a hive lake as flat would
+    * flatten it. A sidecar switch folds through the artifact's own
+    * read-side fold and conservation check — run it while the producing
+    * ingest is stopped. */
+  private def compact(a: Args): Seq[String] = {
+    val lake +: cols = a.pos
+    val chosen = compactSwitches.filter(a.has)
+    if (chosen.size > 1 || (chosen.nonEmpty && cols.nonEmpty))
+      fail(s"compact: unexpected flag among ${(chosen ++ cols).mkString(" ")}" +
+        " — give one switch or partition columns")
+    chosen.headOption match {
+      case Some(kind) if kind != "--flat" =>
+        val (fold, conserve) = Compact.sidecarKinds(kind)
+        val st = Compact.sidecar(a.spark, lake, fold, conserve,
+          maxRecordsPerFile = a.cfg.maxRecordsPerFile, compression = a.cfg.compression)
+        Seq(s"compact task ended, ${st.rows} rows kept, " +
+          s"${st.generations0} -> 1 generations, ${st.files0} -> ${st.files1} files")
+      case flat =>
+        val partCols =
+          if (flat.nonEmpty) Nil
+          else if (cols.nonEmpty) cols
+          else detectPartitionCols(a.spark, lake)
+        val st = Compact.run(a.spark, lake, partCols,
+          maxRecordsPerFile = a.cfg.maxRecordsPerFile, compression = a.cfg.compression)
+        Seq(s"compact task ended, ${st.rows} rows kept, " +
+          s"${st.files0} -> ${st.files1} files")
+    }
+  }
+
+  private def dedup(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val best = a.has("--best")
+    // refuses duplicate, null or non-integral doc_ids before the pipeline
+    // runs; the result is checkpoint-backed, so the census and the write
+    // reuse one pipeline run
+    val disp =
+      if (best) DedupQueries.dedupBest(a.docs(corpus))
+      else DedupQueries.dedupApply(a.docs(corpus))
+    val n = census(disp, "status")
+    a.write(disp, out)
+    if (best)
+      Seq(s"dedup task ended, ${n("kept")} of ${n.values.sum} docs kept " +
+        s"(${n("dup")} duplicates dropped, best-quality canonicals)")
+    else
+      Seq(s"dedup task ended, ${n("kept")} of ${n.values.sum} docs kept " +
+        s"(${n("exact_dup")} exact, ${n("near_dup")} near duplicates dropped)")
+  }
+
+  /** `--sep` is a LITERAL separator (default: a blank line). */
+  private def spanDedup(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    a.write(DocumentQueries.spanDedupCorpus(a.docs(corpus), a[String]("--sep")), out)
+    val Seq(docs, paras, dropped, chars) = longs(a.read(out), count(lit(1)),
+      sum("n_paras"), sum("n_dropped"), sum("chars_dropped"))
+    Seq(s"spandedup task ended, $docs docs, $dropped of $paras paragraphs " +
+      s"dropped ($chars chars)")
+  }
+
+  private def salvage(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val (qmin, sep) = (a[Double]("--quality-min"), a[String]("--sep"))
+    a.write(DocumentQueries.paragraphSalvage(
+      DocumentQueries.corpusParas(a.docs(corpus), sep), qmin, sep), out)
+    val Seq(docs, paras, dropped) = longs(a.read(out), count(lit(1)),
+      sum("n_paras"), sum("n_dropped"))
+    Seq(s"salvage task ended, $docs docs, $dropped of $paras paragraphs " +
+      s"dropped at quality $qmin")
+  }
+
+  private def curate(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val best = a.has("--best")
+    val docs = a.read(corpus).select("doc_id", "lang", "text")
+    // materialized once for its three consumers: the artifact write, the
+    // kept-corpus join and the census
+    val disp = Materialize(DocumentQueries.curateDispositions(docs,
+      a[Double]("--quality-min"), bestCanonical = best))
+    a.write(disp, s"$out/dispositions")
+    a.write(docs.join(disp.filter(col("disposition").isin("train", "val", "test"))
+      .selectExpr("doc_id", "disposition AS split"), Seq("doc_id")),
+      s"$out/corpus", "split")
+    val n = census(disp, "disposition")
+    val dupCensus =
+      if (best) s"${n("dup")} dup (best-quality canonicals), "
+      else s"${n("exact_dup")} exact, ${n("near_dup")} near dup, "
+    Seq(s"curate task ended, ${n("train") + n("val") + n("test")} of " +
+      s"${n.values.sum} docs kept (train ${n("train")}, val ${n("val")}, " +
+      s"test ${n("test")}; dropped: ${n("low_quality")} low quality, " +
+      s"${n("unknown_lang")} unknown lang, " + dupCensus +
+      s"${n("sampled_out")} sampled out)")
+  }
+
+  /** The split is the d13 content-hash assignment, recomputed. */
+  private def decontam(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    // ONE materialized n-gram fingerprint pass feeds both directions
+    // (MainSpec pins zero corpus re-scans in the write actions)
+    val grams = Materialize(DocumentQueries.splitNgramFps(a.docs(corpus), a[Int]("--n")))
+    a.write(DocumentQueries.ngramDecontaminationFromFps(grams), s"$out/eval_report")
+    a.write(DocumentQueries.trainDecontaminationFromFps(grams),
+      s"$out/train_dispositions")
+    val Seq(nEval, hit) = longs(a.read(s"$out/eval_report"), count(lit(1)),
+      sum(when(col("n_hit") > 0, 1L).otherwise(0L)))
+    val Seq(nTrain, drop) = longs(a.read(s"$out/train_dispositions"),
+      count(lit(1)), sum(when(col("disposition") === "drop", 1L).otherwise(0L)))
+    Seq(s"decontam task ended, $hit of $nEval eval docs compromised; drop " +
+      s"$drop of $nTrain train docs to remediate")
+  }
+
+  /** The driver merge loop runs over the Heaps-bounded word table
+    * (SCALE.md); `--min-count` prunes rarer words before the collect. */
+  private def bpeTrain(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val k = a[Int]("--merges")
+    val table = DocumentQueries.bpeMergesDriver(a.docs(corpus), k,
+      a[Long]("--min-count"))
+    val trained = table.count() // a driver-local relation: near-free
+    a.write(table, out)
+    Seq(s"bpetrain task ended, $trained merges trained" +
+      (if (trained < k) s" (pairs exhausted before $k)" else ""))
+  }
+
+  private def tokenize(a: Args): Seq[String] = {
+    val Seq(corpus, merges, out) = a.pos
+    a.write(DocumentQueries.bpeTokenCountsFromMerges(a.docs(corpus),
+      a.read(merges)), out)
+    val Seq(docs, toks) = longs(a.read(out), count(lit(1)), sum("n_bpe_tokens"))
+    Seq(s"tokenize task ended, $toks bpe tokens over $docs docs")
+  }
+
+  /** The slice table is bucket-count-independent (spec-pinned), so
+    * nBuckets is only a tuning choice. */
+  private def pack(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val seqLen = a[Long]("--seq-len")
+    a.write(DocumentQueries.packSequences(a.docs(corpus), seqLen = seqLen,
+      nBuckets = a.spark.sparkContext.defaultParallelism), out)
+    val Seq(seqs, docs, toks) = longs(a.read(out), count_distinct(col("seq_id")),
+      count_distinct(col("doc_id")), sum("n_toks"))
+    Seq(s"pack task ended, $toks tokens from $docs docs packed into $seqs " +
+      s"sequences of $seqLen")
+  }
+
+  private def overlap(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    a.write(DocumentQueries.sourceOverlap(
+      a.read(corpus).select("doc_id", "text", "source")), out)
+    val written = a.read(out)
+    val top = written.orderBy(col("jaccard").desc, col("src_a"), col("src_b"))
+      .limit(1).collect().headOption
+    Seq(s"overlap task ended, ${written.count()} source pairs" + top.fold("")(r =>
+      s"; max overlap ${r.getString(0)}~${r.getString(1)} jaccard " +
+        s"${r.getDouble(5)} (${r.getLong(4)} shared)"))
+  }
+
+  private def select(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val frac = a[Double]("--frac")
+    val docs = a.read(corpus)
+    val sel = DocumentQueries.budgetSelect(docs.select("doc_id", "text"),
+      frac = frac, nBuckets = a.spark.sparkContext.defaultParallelism)
+    a.write(docs.join(sel.select("doc_id", "quality", "cum_tok"), Seq("doc_id")), out)
+    val total = docs.count()
+    val Seq(kept, toks) = longs(a.read(out), count(lit(1)), max("cum_tok"))
+    Seq(s"select task ended, $kept of $total docs kept ($toks tokens, frac " +
+      s"$frac of corpus)")
+  }
+
+  private def semDedup(a: Args): Seq[String] = {
+    val Seq(emb, out) = a.pos
+    val tau = a[Double]("--tau")
+    a.write(EmbeddingQueries.semDedup(a.vectors(emb), tau), out)
+    val n = census(a.read(out), "decision")
+    Seq(s"semdedup task ended, ${n("keep")} of ${n.values.sum} vectors kept " +
+      s"(${n("drop")} semantic duplicates dropped at tau $tau)")
+  }
+
+  private def semDecontam(a: Args): Seq[String] = {
+    val Seq(train, eval, out) = a.pos
+    val tau = a[Double]("--tau")
+    a.write(EmbeddingQueries.semDecontam(a.vectors(train), a.vectors(eval), tau), out)
+    val n = census(a.read(out), "decision")
+    Seq(s"semdecontam task ended, ${n("drop")} of ${n.values.sum} train " +
+      s"vectors semantically contaminated at tau $tau (${n("keep")} clean)")
+  }
+
+  private def dsir(a: Args): Seq[String] = {
+    val Seq(raw, target, out) = a.pos
+    a.write(DocumentQueries.dsirWeights(a.docs(raw), a.docs(target)), out)
+    val c = a.read(out)
+      .agg(count(lit(1)), avg(col("log_ratio")), max(col("log_ratio"))).head()
+    // avg/max are NULL over an empty manifest
+    if (c.getLong(0) == 0L) Seq("dsir task ended, 0 raw docs scored")
+    else Seq(f"dsir task ended, ${c.getLong(0)} raw docs scored " +
+      f"(mean log-ratio ${c.getDouble(1)}%.4f, best ${c.getDouble(2)}%.4f)")
+  }
+
+  private def cluster(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    val corpusDf = a.read(corpus)
+    a.write(DocumentQueries.domainClusters(corpusDf.select(col("doc_id"), col("text"))), out)
+    val saved = a.read(out)
+    val sizes = saved.groupBy("cluster").count()
+      .orderBy(col("count").desc, col("cluster"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    val dominant =
+      if (!corpusDf.columns.contains("source")) Map.empty[Long, String]
+      else saved.join(corpusDf.select(col("doc_id"), col("source")), "doc_id")
+        .groupBy("cluster", "source").count().collect()
+        .groupBy(_.getLong(0))
+        .map { case (cl, rows) =>
+          cl -> rows.maxBy(r => (r.getLong(2), r.getString(1))).getString(1)
+        }
+    val head = sizes.take(3).map { case (cl, n) =>
+      dominant.get(cl).fold(s"$cl:$n")(src => s"$cl:$n($src)")
+    }.mkString(", ")
+    Seq(s"cluster task ended, ${sizes.map(_._2).sum} docs over " +
+      s"${sizes.length} clusters (largest $head)")
+  }
+
+  private def bm25Index(a: Args): Seq[String] = {
+    val Seq(corpus, out) = a.pos
+    a.write(DocumentQueries.bm25Index(a.docs(corpus)), out)
+    val Seq(postings, terms, docs) = longs(a.read(out), count(lit(1)),
+      count_distinct(col("term")), max(col("n_docs")))
+    if (postings == 0L) Seq("bm25index task ended, empty corpus")
+    else Seq(s"bm25index task ended, $postings postings over $terms terms " +
+      s"($docs docs)")
+  }
+
+  private def bm25(a: Args): Seq[String] = {
+    val Seq(index, probesDir, out) = a.pos
+    val probes = a.read(probesDir)
+    if (!Seq("query_id", "qtext").forall(probes.columns.contains))
+      fail("bm25: the probes table needs (query_id, qtext) columns")
+    val k = a[Int]("--topk")
+    a.write(DocumentQueries.bm25Probe(a.read(index),
+      probes.select(col("query_id"), col("qtext")), k = k), out)
+    val Seq(n, q) = longs(a.read(out), count(lit(1)), count_distinct(col("query_id")))
+    Seq(s"bm25 task ended, $n results over $q queries (top-$k)")
+  }
+
+  private def ivfTrain(a: Args): Seq[String] = {
+    val Seq(emb, out) = a.pos
+    a.write(EmbeddingQueries.trainQuantizer(a.read(emb)), out)
+    Seq(s"ivftrain task ended, ${a.read(out).count()} centroids " +
+      s"(cells=${QueryConf.ivfCells(a.spark)}, " +
+      s"rounds=${QueryConf.lloydRounds(a.spark)}; the " +
+      "artifact is only comparable under these knobs)")
+  }
+
+  private def ivfIndex(a: Args): Seq[String] = {
+    val Seq(emb, centroids, out) = a.pos
+    // repartition ON the partition key: one file per cell, not a sliver
+    // per task in every cell= dir (2.2x slower to probe at 100k vectors,
+    // SCALE.md "ann --index cell pruning")
+    a.write(EmbeddingQueries.ivfIndex(a.read(emb), a.read(centroids))
+      .repartition(col("cell")), out, "cell")
+    val Seq(n, cells) = longs(a.read(out), count(lit(1)), count_distinct(col("cell")))
+    Seq(s"ivfindex task ended, $n vectors over $cells cells (partitioned by " +
+      "cell; probe-able only under the centroids it was assigned with)")
+  }
+
+  /** Queries come from `--queries` or are the corpus's first
+    * `--nqueries` vectors (the s04 gate convention). With `--index` the
+    * corpus is neither trained on nor re-assigned. */
+  private def ann(a: Args): Seq[String] = {
+    val Seq(emb, out) = a.pos
+    val Seq(queriesDir, centroids, index) =
+      Seq("--queries", "--centroids", "--index").map(a.opt[String](_))
+    if (index.isDefined && centroids.isEmpty)
+      fail("ann: --index needs --centroids — the probe batch assigns " +
+        "against the same stored quantizer the index was built with")
+    if (queriesDir.isDefined && a.opt[Int]("--nqueries").isDefined)
+      fail("ann: --queries and --nqueries are mutually exclusive — " +
+        "an external query table carries its own row set")
+    val k = a[Int]("--topk")
+    val corpus = a.read(emb)
+    val queries = queriesDir.map(a.read)
+      .getOrElse(corpus.filter(col("vec_id") < a[Int]("--nqueries")))
+    // pre-r19 artifacts carry no self-description, so the library's
+    // knob/digest checks are vacuous there: say so
+    centroids.foreach { d =>
+      if (!a.read(d).columns.contains("meta_ver"))
+        System.err.println("[ann] WARNING: centroids artifact at " +
+          s"$d carries no self-description (pre-r19 ivftrain) — a " +
+          "knob mismatch cannot be detected; retrain with ivftrain")
+    }
+    val ranks = index match {
+      case Some(ix) => EmbeddingQueries.annRankTableIndexed(a.read(ix),
+        queries, a.read(centroids.get), k = k)
+      case None => EmbeddingQueries.annRankTable(corpus, queries, k = k,
+        centroids = centroids.map(a.read))
+    }
+    a.write(ranks, out)
+    val Seq(n, q) = longs(a.read(out), count(lit(1)), count_distinct(col("query_id")))
+    Seq(s"ann task ended, $n results over $q queries (top-$k)")
+  }
+
+  private def fuse(a: Args): Seq[String] = {
+    val (rankDirs, out) = (a.pos.init, a.pos.last)
+    val k = a[Int]("--topk")
+    a.write(DocumentQueries.rrfFuse(rankDirs.map(a.read), k = k), out)
+    val Seq(n, q) = longs(a.read(out), count(lit(1)), count_distinct(col("query_id")))
+    Seq(s"fuse task ended, $n fused results over $q queries from " +
+      s"${rankDirs.size} rank tables (top-$k)")
+  }
+
+  /** `transform --loop <seconds>`: the reference's ops runbook
+    * (scripts/transform.sh:19-26 re-runs `s3logs transform` on a timer)
+    * as one daemon. Each iteration transforms EXACTLY the staging files
+    * past the F3 age gate, then moves them into a hidden `.processed/`
+    * sibling (the reference's transform_cleanup, utils.rs:1273-1294):
+    * the move makes the loop idempotent and restart-safe with no ledger.
+    * SIGTERM finishes the current iteration; files move only AFTER their
+    * run commits, so a kill mid-iteration re-processes that batch
+    * (append-mode duplicates, the reference's own crash semantics).
+    * `--iterations n` bounds the loop for tests and cron runs. */
   private[graft] def transformLoop(spark: SparkSession, inputs: Seq[String],
       out: String, cfg: EtlConfig, intervalSeconds: Long,
       maxIterations: Option[Int]): Seq[String] = {
@@ -1382,50 +818,11 @@ object Main {
     cols
   }
 
-  private final case class Opts(named: Map[String, String], positional: Seq[String]) {
-    def getOrElse(k: String, d: => String): String = named.getOrElse(k, d)
-  }
-
-  /** `-x value` flag splitter; everything else is positional. */
-  private def flags(args: List[String]): Opts = {
-    @annotation.tailrec
-    def loop(rest: List[String], named: Map[String, String],
-        pos: Vector[String]): Opts = rest match {
-      case f :: v :: tail if f.startsWith("-") => loop(tail, named + (f -> v), pos)
-      case f :: Nil if f.startsWith("-") => fail(s"flag $f needs a value")
-      case v :: tail => loop(tail, named, pos :+ v)
-      case Nil => Opts(named, pos)
-    }
-    loop(args, Map.empty, Vector.empty)
-  }
-
-  private def req(opts: Opts, k: String): String =
-    opts.named.getOrElse(k, fail(s"missing required flag $k\n$usage"))
-
-  /** Loud refusal of unknown named flags (self-review r18): a typo'd
-    * flag (`--queris`) silently dropped by the generic splitter produces
-    * a plausible-but-wrong artifact — the worst failure mode a CLI has.
-    * Scoped per verb so each validates its own vocabulary. */
-  private def rejectUnknownFlags(verb: String, opts: Opts,
-      allowed: Set[String]): Unit = {
-    val unknown = opts.named.keySet -- allowed
-    if (unknown.nonEmpty)
-      fail(s"$verb: unknown flag(s) ${unknown.toSeq.sorted.mkString(", ")}" +
-        (if (allowed.nonEmpty)
-           s" — accepted: ${allowed.toSeq.sorted.mkString(", ")}"
-         else " — this verb takes no flags") + s"\n$usage")
-  }
-
-  /** CANONICAL path for the output-clash guards (ADVICE r17, extended to
-    * every artifact-writing retrieval verb by the r18 self-review):
-    * exact qualified-path equality misses aliases the filesystem
-    * resolves but makeQualified does not (symlinks, dot segments) and
-    * misses nesting — an output that is a PARENT of an input destroys
-    * the input through overwrite's delete, an output INSIDE an input
-    * corrupts it. Local paths go through File.getCanonicalPath (resolves
-    * symlinks); remote schemes through FileSystem.resolvePath where the
-    * path exists, falling back to the qualified form for a
-    * not-yet-created output. */
+  /** CANONICAL path for the output-clash guard: qualified-path equality
+    * misses symlinks, dot segments and nesting (an output that is a
+    * PARENT of an input deletes it on overwrite). Local paths resolve via
+    * File.getCanonicalPath, remote ones via FileSystem.resolvePath where
+    * the path exists, else the qualified form. */
   private def canonPath(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())

@@ -128,7 +128,12 @@ object Materialize {
     * for one 100k-row parse). Materializing first runs the projection
     * once; the sampler and the sort then read the narrow materialized
     * blocks. The sort itself — the declared presentation order — is
-    * unchanged, so results are byte-identical. */
+    * unchanged, so results are byte-identical.
+    *
+    * Terminal presentation sorts only: never call it inside an iterative
+    * loop. Under [[DirKey]] (GRAFT_CHECKPOINT_DIR) it makes NO lineage
+    * cut, so a loop's plan would grow unbounded in that deployment
+    * alone; loops cut with [[apply]] or [[lazyCut]]. */
   def sortedOnce(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame =
     // lazyCut, not an eager cut (r19): the range sampler itself reads

@@ -102,6 +102,14 @@ object Compact {
   final case class SidecarStats(files0: Long, files1: Long, rows: Long,
       generations0: Long)
 
+  /** One aggregate row of longs; a NULL (a sum, min or max over no
+    * rows) reads as 0. */
+  private[graft] def longs(df: org.apache.spark.sql.DataFrame,
+      aggs: org.apache.spark.sql.Column*): Seq[Long] = {
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    aggs.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+  }
+
   /** Per-artifact (fold, conserve) pairs for [[sidecar]], keyed by the
     * CLI flag — defined here next to the commit machinery so the CLI
     * stays a pure dispatcher and a new sidecar kind lands in ONE place.
@@ -112,25 +120,20 @@ object Compact {
       (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
        org.apache.spark.sql.DataFrame => Seq[Long])] = {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{coalesce, count, countDistinct,
-      lit, min, sum}
-    def longs(df: DataFrame,
-        aggs: Seq[org.apache.spark.sql.Column]): Seq[Long] = {
-      val r = df.agg(aggs.head, aggs.tail: _*).head
-      (0 until r.length).map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
-    }
+    import org.apache.spark.sql.functions.{count, countDistinct, lit, min,
+      sum}
     Map(
       "--sigs" -> ((identity[DataFrame] _,
         (df: DataFrame) =>
-          longs(df, Seq(count(lit(1)), countDistinct(col("doc_id")))))),
+          longs(df, count(lit(1)), countDistinct(col("doc_id"))))),
       "--spansigs" -> ((graft.queries.DocumentQueries.foldSpanSignatures _,
-        (df: DataFrame) => longs(df, Seq(coalesce(sum(col("df")), lit(0L)),
-          countDistinct(col("para_fp")))))),
+        (df: DataFrame) => longs(df, sum(col("df")),
+          countDistinct(col("para_fp"))))),
       "--evalsigs" ->
         ((graft.queries.DocumentQueries.foldEvalNgramSignatures _,
           (df: DataFrame) =>
-            longs(df, Seq(coalesce(sum(col("eval_df")), lit(0L)),
-              countDistinct(col("fp")))))),
+            longs(df, sum(col("eval_df")),
+              countDistinct(col("fp"))))),
       // winnowed-fp index (d53/d54): rows are doc-disjoint under the
       // unique-doc_id ingest contract, but each generation carries
       // BATCH-LOCAL df — the fold recomputes the GLOBAL per-fp df
@@ -140,16 +143,16 @@ object Compact {
       // doc count + distinct fp count (df VALUES change by design)
       "--winnowsigs" -> ((graft.queries.DocumentQueries.foldWinnowSignatures _,
         (df: DataFrame) =>
-          longs(df, Seq(count(lit(1)), countDistinct(col("doc_id")),
-            countDistinct(col("fp")))))),
+          longs(df, count(lit(1)), countDistinct(col("doc_id")),
+            countDistinct(col("fp"))))),
       // d16/d24 rep index: same-fp rows across generations MERGE (min
       // rep = the global exact-dup representative) and bucket_ns is
       // recomputed over the folded rep set — so row count shrinks by
       // design; conserve = distinct fp count + the global min rep id
       "--repsigs" -> ((graft.queries.DedupQueries.foldRepIndex _,
         (df: DataFrame) =>
-          longs(df, Seq(countDistinct(col("fp")),
-            coalesce(min(col("rep")), lit(0L)))))))
+          longs(df, countDistinct(col("fp")),
+            min(col("rep"))))))
   }
 
   /** Generation compaction for the `batch=`-partitioned signature

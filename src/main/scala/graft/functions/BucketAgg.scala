@@ -46,8 +46,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * representatives), insertion keeps the buffer ascending by id, and
   * merge replays one buffer into the other — any partial-aggregation
   * grouping yields the same members (spec-pinned vs the join-back
-  * reference). Null id/mh rows are skipped (the SQL aggregate
-  * convention; signature rows never carry them). `cap` must be a
+  * reference). Null-id rows are skipped (the SQL aggregate convention);
+  * a null-mh row counts toward `bucket_n`, which stays the exact
+  * occupancy, but is never a member. `cap` must be a
   * foldable positive literal: a per-row cap would make partial buffers
   * unmergeable. */
 case class BucketAgg(
@@ -89,7 +90,10 @@ case class BucketAgg(
     mhExpr match {
       case Some(me) =>
         val mh = me.eval(input)
-        if (id != null && mh != null)
+        // a null signature still occupies the bucket but has nothing to
+        // pair on: counted, never a member
+        if (id != null && mh == null) b.total += 1
+        else if (id != null)
           // copy out of the (reused) input row before buffering
           b.offer(id.asInstanceOf[Long],
             mh.asInstanceOf[ArrayData].toLongArray())

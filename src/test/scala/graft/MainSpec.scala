@@ -1454,4 +1454,95 @@ class MainSpec extends SparkSpec {
     intercept[IllegalArgumentException](Main.run(spark,
       Seq("stream", "--queue-dir", "/q", "landing", "out", "ckpt"), Map.empty))
   }
+
+  // every verb that replaces its output, with the number of input
+  // positionals it takes before that output
+  private val overwriteVerbs = Seq(
+    "dedup" -> 1, "spandedup" -> 1, "salvage" -> 1, "curate" -> 1,
+    "decontam" -> 1, "bpetrain" -> 1, "tokenize" -> 2, "pack" -> 1,
+    "overlap" -> 1, "select" -> 1, "semdedup" -> 1, "semdecontam" -> 2,
+    "dsir" -> 2, "cluster" -> 1, "bm25index" -> 1, "bm25" -> 2,
+    "ivftrain" -> 1, "ivfindex" -> 2, "ann" -> 1, "fuse" -> 2)
+
+  test("every overwrite verb refuses an output that is the parent of, a " +
+    "symlink to, or nested in an input, and the input survives") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-cli-clash").toString
+    val corpus = Seq((1L, "alpha beta gamma delta", "en", "crawlA"))
+      .toDF("doc_id", "text", "lang", "source")
+    overwriteVerbs.foreach { case (verb, nIn) =>
+      val root = s"$tmp/$verb"
+      val inputs = (0 until nIn).map(i => s"$root/in$i")
+      inputs.foreach(corpus.write.parquet)
+      val link = Files.createSymbolicLink(java.nio.file.Paths.get(s"$root/link"),
+        java.nio.file.Paths.get(inputs.head)).toString
+      Seq(root, link, s"${inputs.head}/nested").foreach { out =>
+        val e = intercept[IllegalArgumentException](
+          Main.run(spark, (verb +: inputs) :+ out, Map.empty))
+        assert(e.getMessage.contains("must differ"), s"$verb -> $out: ${e.getMessage}")
+        inputs.foreach(in => assert(spark.read.parquet(in).count() == 1,
+          s"$verb -> $out destroyed $in"))
+      }
+    }
+  }
+
+  test("every verb refuses an unknown flag before any Spark job runs") {
+    val tmp = Files.createTempDirectory("graft-cli-bogus").toString
+    def dirs(n: Int) = (0 until n).map(i => s"$tmp/nope$i")
+    val invocations = overwriteVerbs.map { case (verb, nIn) =>
+      verb +: dirs(nIn + 1) } ++ Seq(
+      Seq("aggregate", "local") ++ dirs(1),
+      Seq("transform", "-o", s"$tmp/out") ++ dirs(1),
+      Seq("stream", "--once") ++ dirs(3),
+      Seq("stream", "--once", "--queue-dir", s"$tmp/q") ++ dirs(2),
+      Seq("ingest", "--once") ++ dirs(3),
+      Seq("compact") ++ dirs(1),
+      Seq("aggregate", "s3", "-r", "r", "-b", "b", "-k", "k"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cli-bogus") => jobs.incrementAndGet()
+          case Some("cli-bogus-sentinel") => sentinel.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("cli-bogus", "unknown-flag refusals")
+      invocations.foreach { args =>
+        val e = intercept[IllegalArgumentException](
+          Main.run(spark, args ++ Seq("--bogus", "1"), Map.empty))
+        assert(e.getMessage.contains("unknown flag"),
+          s"${args.take(2).mkString(" ")}: ${e.getMessage}")
+      }
+      // the listener bus delivers in order: once the sentinel job is
+      // seen, every job the refusals started has been counted
+      sc.setJobGroup("cli-bogus-sentinel", "sentinel")
+      spark.range(1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} job(s) ran before a refusal")
+  }
+
+  test("usage is generated from the verb table and the README CLI block " +
+    "is that usage, line for line") {
+    assert(Main.verbs.filter(_.overwrite).map(_.name).toSet ==
+      overwriteVerbs.map(_._1).toSet)
+    val usage = Main.usage.linesIterator.drop(1).map(_.trim).toSeq
+    assert(usage.size == Main.verbs.size)
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val block = try readme.getLines()
+      .dropWhile(_ != "## CLI").dropWhile(_ != "```").drop(1)
+      .takeWhile(_ != "```").toSeq
+    finally readme.close()
+    assert(block == usage, s"README CLI block drifted; usage is:\n" +
+      usage.mkString("\n"))
+  }
 }
